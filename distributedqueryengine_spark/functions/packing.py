@@ -14,11 +14,11 @@ Two layouts over a corpus with per-document token counts:
   by pytest invariants (coverage / budget / determinism / reference
   packer equivalence) instead of a SQL oracle.
 
-Scale design (100 TB): the global running sum is computed as a
-distributed two-phase prefix sum — deterministic fixed-width id
-bucketing, per-bucket window cumsum, plus a driver-side exclusive
-cumsum over the ~G per-bucket totals (G rows collected, never data).
-No global single-partition window anywhere. `greedy_pack` shards the
+Scale design (100 TB): the global running sum is one
+operators.windows.segmented_prefix over id order — fixed-width id
+ranges, one bounded window over their token totals for the bases, a
+window cumsum per range — so no corpus-sized single-partition window
+and no construction-time job. `greedy_pack` shards the
 corpus into hash groups and packs each group independently inside
 `applyInPandas` — bins never span groups, so packing parallelizes
 embarrassingly; cross-group waste is bounded by one bin per group.
@@ -30,66 +30,8 @@ RPC.cs:20-28); this is north-star training-pipeline capability.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-
-def _prefix_sum(
-    src: DataFrame, spark: SparkSession, rows_per_bucket: int = 65536
-) -> DataFrame:
-    """Exclusive running sum of `t` over global `id` order, distributed.
-
-    Input schema (id: long, t: long) -> adds `off` (tokens before this
-    row). Buckets are fixed-width id ranges (monotonic in id, fully
-    deterministic — unlike repartitionByRange, whose sampled boundaries
-    are not reproducible run-to-run).
-
-    Fully LAZY since r17 (zero construction-time jobs): the corpus
-    stats ride a bounded 1-row broadcast cross, the per-bucket totals
-    turn into exclusive bases with ONE bounded window over the ~G-row
-    totals frame (the distributed analog of the old driver-side
-    cumsum — G = n/rows_per_bucket rows, which the driver previously
-    collected in full), and the bases broadcast-join back. The offsets
-    are invariant to where bucket boundaries land, so the in-plan
-    width arithmetic only has to be deterministic, not bit-equal to
-    the old driver floats.
-    """
-    stats = src.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.min("id").alias("__lo"),
-        F.max("id").alias("__hi"),
-    )
-    n_buckets = F.greatest(
-        F.lit(1),
-        F.ceil(F.col("__n") / F.lit(float(rows_per_bucket))),
-    )
-    width = F.greatest(
-        F.lit(1),
-        F.ceil((F.col("__hi") - F.col("__lo") + 1) / n_buckets.cast("double")),
-    )
-    b = (
-        src.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "bkt", ((F.col("id") - F.col("__lo")) / width).cast("long")
-        )
-        .drop("__n", "__lo", "__hi")
-    )
-    totals = b.groupBy("bkt").agg(F.sum("t").alias("__tot"))
-    wb = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    bases = totals.select(
-        "bkt",
-        F.coalesce(F.sum("__tot").over(wb), F.lit(0))
-        .cast("long").alias("base"),
-    )
-    w = Window.partitionBy("bkt").orderBy("id").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    return (
-        b.join(F.broadcast(bases), "bkt")
-        .withColumn("off", F.col("base") + F.coalesce(F.sum("t").over(w), F.lit(0)))
-        .drop("bkt", "base")
-    )
 
 
 def concat_pack_layout(
@@ -97,7 +39,6 @@ def concat_pack_layout(
     tokens: Column,
     id_col: str = "doc_id",
     seq_len: int = 512,
-    rows_per_bucket: int = 65536,
 ) -> DataFrame:
     """Concat-then-chunk packing layout: global token offset + spanned
     sequence range per document, in ascending `id_col` order.
@@ -106,30 +47,31 @@ def concat_pack_layout(
     n_seqs). A zero-token document occupies no tokens: it is pinned to
     the sequence at its offset (seq_first == seq_last).
     """
+    from distributedqueryengine_spark.functions.dedup import _scoped_persist
+    from distributedqueryengine_spark.operators.windows import segmented_prefix
     from distributedqueryengine_spark.session import ensure_parallelism
 
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
-    # The prefix sum runs three jobs (corpus stats, bucket totals, the
-    # laid-out result); persist the 16-byte (id, t) projection so the
-    # token-count scan — the only per-document work — runs once, wide.
-    # Scoped (dedup's bounded FIFO): repeated calls in a long session
-    # must not accumulate one cached projection per call (r12 lesson).
-    from distributedqueryengine_spark.functions.dedup import _scoped_persist
-
+    # The prefix plan reads the (id, t) projection several times (id
+    # bounds, range totals, the laid-out result); persist the 16-byte
+    # projection so the token-count scan — the only per-document work —
+    # runs once, wide. Scoped (dedup's bounded FIFO): repeated calls in
+    # a long session must not accumulate one cached projection per call.
     src = _scoped_persist(
         ensure_parallelism(df).select(
             F.col(id_col).alias("id"), tokens.cast("long").alias("t")
         )
     )
-    laid = _prefix_sum(src, df.sparkSession, rows_per_bucket)
+    laid = segmented_prefix(src, [], "id", measure="t", out="__end")
+    off = F.col("__end") - F.col("t")
     return laid.select(
         F.col("id").alias(id_col),
         F.col("t").alias("n_tokens"),
-        F.col("off").alias("tok_offset"),
-        F.floor(F.col("off") / seq_len).alias("seq_first"),
+        off.alias("tok_offset"),
+        F.floor(off / seq_len).alias("seq_first"),
         F.floor(
-            (F.col("off") + F.greatest(F.col("t"), F.lit(1)) - 1) / seq_len
+            (off + F.greatest(F.col("t"), F.lit(1)) - 1) / seq_len
         ).alias("seq_last"),
     ).withColumn("n_seqs", F.col("seq_last") - F.col("seq_first") + 1)
 

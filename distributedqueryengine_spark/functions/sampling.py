@@ -17,7 +17,6 @@ no global sort, no driver materialization beyond n rows' keys.
 
 from __future__ import annotations
 
-import math
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -177,116 +176,58 @@ def _weight_sql_type(df: DataFrame, weight_col: str) -> str:
     return "long"
 
 
-def _budget_prefix_lazy(
-    ksrc: DataFrame,
-    budgets,
-    wt_type: str,
+def _budget_prefix(
+    src: DataFrame,
+    keys: list[str],
+    limit,
     n_buckets: int,
-    group_col: str | None = None,
 ) -> DataFrame:
-    """Fully-LAZY two-phase maximal-prefix selection (r17): the same
-    arithmetic as the collect paths of :func:`select_until_budget` /
-    :func:`select_until_budget_grouped`, but with the driver's stats
-    collects replaced by in-plan frames — per-(group) score bounds
-    broadcast-joined back, per-(group, segment) weight totals turned
-    into exclusive bases by ONE bounded window over the stats frame
-    (≤ n_buckets rows per group — the distributed analog of the
-    driver's sorted-loop cumsum), bases broadcast-joined onto the
-    corpus. ZERO construction-time jobs; identical output rows
-    (pinned in tests/test_sampling.py). No skew refinement — see the
-    callers' lazy_prefix contract.
+    """Maximal prefix of `src` (keys…, id, score, wt) in (score desc,
+    id asc) order per key while the running weight stays <= the key's
+    budget: one :func:`segmented_prefix` over -score with the id as
+    tie-break, so a score owning most of a corpus still splits into
+    balanced windows. Returns (keys…, id, score, weight, cum)."""
+    from distributedqueryengine_spark.operators.windows import segmented_prefix
 
-    `ksrc` carries (grp?, id, score, wt, __k); `budgets` is an int
-    (ungrouped) or {group: budget} dict (grouped, keyed by `grp`).
-    Returns (grp?, id, score, weight, cum).
-    """
-    from pyspark.sql.types import StructField, StructType
-    from pyspark.sql.window import Window
+    return segmented_prefix(
+        src.withColumn("__k", -F.col("score")),
+        keys,
+        "__k",
+        tie="id",
+        measure="wt",
+        limit=limit,
+        n_buckets=n_buckets,
+        out="cum",
+    ).select(
+        *keys, "id", "score", F.col("wt").alias("weight"), "cum"
+    )
 
-    spark = ksrc.sparkSession
-    zero = 0 if wt_type == "long" else 0.0
-    keys = [] if group_col is None else ["grp"]
-    if group_col is None:
-        gst = ksrc.agg(
-            F.min("__k").alias("__glo"), F.max("__k").alias("__ghi")
-        )
-        b = ksrc.crossJoin(F.broadcast(gst))
-    else:
-        gst = ksrc.groupBy("grp").agg(
-            F.min("__k").alias("__glo"), F.max("__k").alias("__ghi")
-        )
-        b = ksrc.join(F.broadcast(gst), "grp")
-    width = (F.col("__ghi") - F.col("__glo")) / F.lit(float(n_buckets))
-    seg = (
-        F.when(
-            F.col("__ghi") > F.col("__glo"),
-            F.least(
-                F.floor((F.col("__k") - F.col("__glo")) / width),
-                F.lit(n_buckets - 1),
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    b = b.withColumn("__seg", seg).drop("__glo", "__ghi")
-    stats = b.groupBy(*keys, "__seg").agg(F.sum("wt").alias("__m"))
-    wseg = (
-        Window.partitionBy(*keys)
-        .orderBy("__seg")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bases = stats.withColumn(
-        "__base",
-        F.coalesce(F.sum("__m").over(wseg), F.lit(zero)).cast(wt_type),
-    )
-    if group_col is None:
-        bases = bases.withColumn(
-            "__budget",
-            F.lit(int(budgets) if wt_type == "long" else float(budgets))
-            .cast(wt_type),
-        )
-    else:
-        from pyspark.sql.types import DoubleType, LongType
 
-        btbl = spark.createDataFrame(
-            [
-                (g, int(v) if wt_type == "long" else float(v))
-                for g, v in budgets.items()
-            ],
-            StructType(
-                [
-                    StructField("grp", ksrc.schema["grp"].dataType),
-                    StructField(
-                        "__budget",
-                        LongType() if wt_type == "long" else DoubleType(),
-                    ),
-                ]
-            ),
+def _budget_source(
+    df: DataFrame, id_col: str, score_col: str, weight_col: str,
+    wt_type: str, *group: Column,
+) -> DataFrame:
+    """The (group…, id, score, wt) projection the budget selectors
+    rank. Rows with NULL id/score/weight or NaN score are never
+    selectable — they have no place in the rank order and would poison
+    the running total — so they are dropped up front. Persisted through
+    the shared bounded registry: the prefix plan reads it several
+    times, and upstream scoring expressions (often expensive quality
+    heuristics) should evaluate once."""
+    from distributedqueryengine_spark.functions.dedup import _scoped_persist
+
+    return _scoped_persist(
+        df.select(
+            *group,
+            F.col(id_col).alias("id"),
+            F.col(score_col).cast("double").alias("score"),
+            F.col(weight_col).cast(wt_type).alias("wt"),
+        ).filter(
+            F.col("id").isNotNull()
+            & F.col("score").isNotNull()
+            & ~F.isnan("score")
+            & F.col("wt").isNotNull()
         )
-        bases = bases.join(F.broadcast(btbl), "grp")
-    bases = bases.filter(F.col("__base") <= F.col("__budget")).select(
-        *keys, "__seg", "__base", "__budget"
-    )
-    w = (
-        Window.partitionBy(*keys, "__seg")
-        .orderBy(F.col("score").desc(), F.col("id").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    out = (
-        b.join(F.broadcast(bases), keys + ["__seg"])
-        .withColumn(
-            "cum",
-            F.col("__base")
-            + F.coalesce(F.sum("wt").over(w), F.lit(zero))
-            + F.col("wt"),
-        )
-        .filter(F.col("cum") <= F.col("__budget"))
-    )
-    if group_col is None:
-        return out.select("id", "score", F.col("wt").alias("weight"), "cum")
-    return out.select(
-        F.col("grp").alias(group_col), "id", "score",
-        F.col("wt").alias("weight"), "cum",
     )
 
 
@@ -297,8 +238,6 @@ def select_until_budget(
     weight_col: str = "w",
     score_col: str = "score",
     n_buckets: int = 1024,
-    min_heavy: int = 65536,
-    lazy_prefix: bool = False,
 ) -> DataFrame:
     """Maximal-prefix selection under a weight budget: take rows in
     (score desc, id asc) order while the running weight total stays
@@ -306,114 +245,31 @@ def select_until_budget(
     the standard curation step when assembling a fixed-size training
     set from a scored corpus.
 
-    Distributed exact prefix sum WITHOUT a global sort, skew-adaptive:
-    rows segment monotonically in rank order via
-    operators.windows._rank_segments (fixed-width score ranges
-    descending; heavy segments refine by finer ranges, and segments
-    dominated by ONE tied score — the realistic quality-heuristic
-    distribution where 40% of a corpus scores exactly 0.0 — split at
-    sampled id boundaries, which stay monotone because ties order by
-    id). Segment weight totals aggregate map-side to a driver-bounded
-    table, the driver computes the exclusive cumsum (and prunes every
-    segment whose base already exceeds the budget — a partition-
-    pruning analog), and each surviving segment finishes its own
-    window cumsum in parallel. Because the inclusive running total is
-    monotone along the rank order, ``cum <= budget`` IS the maximal
-    prefix — no second pass to find the cut point, and the selection
-    is invariant to where segment boundaries land.
+    Distributed exact prefix sum WITHOUT a global sort, in one lazy
+    plan (operators.windows.segmented_prefix): rows segment by score
+    range, a score tied across many rows (the realistic quality-
+    heuristic distribution where 40% of a corpus scores exactly 0.0)
+    splits by id range, segments whose base already exceeds the budget
+    are pruned before the final window, and each surviving segment
+    finishes its own running total in parallel. Because the inclusive
+    running total is monotone along the rank order, ``cum <= budget``
+    IS the maximal prefix — no second pass to find the cut point, and
+    the selection is invariant to where segment boundaries land.
 
     The id column keeps its NATIVE type (any orderable type works —
-    string doc-ids included; r13 ADVICE fixed the silent cast-to-long
-    that nulled them out). The weight column keeps its NUMERIC FAMILY
-    (r15): integral weights run the long path (cum is long — the
+    string doc-ids included). The weight column keeps its NUMERIC
+    FAMILY: integral weights run the long path (cum is long — the
     token-count case), fractional weights (float/double/decimal) stay
     double end-to-end (cum is double) instead of silently truncating.
     Rows with NULL id/score/weight or NaN score are never selectable
     and are dropped up front. Returns the selected rows as (id, score,
     weight, cum) with cum the inclusive running total, deterministic
     on any cluster layout.
-
-    ``lazy_prefix=True`` (r17) builds the ENTIRE two-phase prefix as
-    one lazy plan — segment stats aggregate → exclusive cumsum over
-    the ≤``n_buckets``-row stats frame (a bounded single-task window,
-    the distributed analog of the driver loop) → broadcast join —
-    with ZERO construction-time collect jobs (guide §5: the driver
-    does no data work; each collect was a full serial corpus pass at
-    construction). Identical rows (pinned in tests/test_sampling.py).
-    The trade: the lazy path skips the tie-skew refinement rounds, so
-    a score value owning ≫min_heavy rows sorts through one window
-    task — callers asserting a spread score distribution (the suite
-    queries) opt in; the default keeps the skew-adaptive collect path.
     """
-    from pyspark.sql.window import Window
-
-    # the function runs a handful of bounded jobs over this projection
-    # (segment stats, optional refinement, the final windowed pass) —
-    # persist it through the shared bounded registry so the upstream
-    # scoring expressions (often expensive, e.g. quality heuristics)
-    # evaluate ONCE, with the same no-net-growth discipline as dedup's
-    # pipeline cache
-    from distributedqueryengine_spark.functions.dedup import _scoped_persist
-    from distributedqueryengine_spark.operators.windows import _rank_segments
-
     wt_type = _weight_sql_type(df, weight_col)
-    src = _scoped_persist(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(score_col).cast("double").alias("score"),
-            F.col(weight_col).cast(wt_type).alias("wt"),
-        )
-        # null score/weight/id rows have no place in the rank order and
-        # would poison the running total (and the driver-side segment
-        # sort) — they are never selectable, drop them up front
-        .filter(
-            F.col("id").isNotNull()
-            & F.col("score").isNotNull()
-            & ~F.isnan("score")
-            & F.col("wt").isNotNull()
-        )
-    )
-    # rank order is (score desc, id asc) → ascending key = -score
-    ksrc = src.withColumn("__k", -F.col("score"))
-    if lazy_prefix:
-        return _budget_prefix_lazy(ksrc, budget, wt_type, n_buckets)
-    b, segs = _rank_segments(
-        ksrc, "id", n_buckets, F.sum("wt"), nulls_first=True,
-        min_heavy=min_heavy,
-    )
-    if not segs:
-        return (
-            src.withColumnRenamed("wt", "weight")
-            .withColumn("cum", F.lit(0).cast(wt_type))
-            .limit(0)
-        )
-    base_rows = []
-    acc = 0 if wt_type == "long" else 0.0
-    for seg_id, _cnt, wsum in segs:
-        if acc <= budget:
-            # segments whose exclusive base already exceeds the budget
-            # can never contribute — prune them before the scan
-            base_rows.append((seg_id, acc))
-        acc += int(wsum) if wt_type == "long" else float(wsum)
-    bases = df.sparkSession.createDataFrame(
-        base_rows, f"__seg long, __base {wt_type}"
-    )
-    w = (
-        Window.partitionBy("__seg")
-        .orderBy(F.col("score").desc(), F.col("id").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        b.join(F.broadcast(bases), "__seg")
-        .withColumn(
-            "cum",
-            F.col("__base")
-            + F.coalesce(F.sum("wt").over(w), F.lit(0))
-            + F.col("wt"),
-        )
-        .filter(F.col("cum") <= budget)
-        .select("id", "score", F.col("wt").alias("weight"), "cum")
-    )
+    src = _budget_source(df, id_col, score_col, weight_col, wt_type)
+    cap = int(budget) if wt_type == "long" else float(budget)
+    return _budget_prefix(src, [], cap, n_buckets)
 
 
 def temperature_mixture_rates(
@@ -466,6 +322,44 @@ def temperature_mixture_rates(
     )
 
 
+def _epoch_positions(
+    frame: DataFrame, epochs: Sequence[int], seed: int
+) -> DataFrame:
+    """`frame` (with a unique `id`) × `epochs`, each row carrying its
+    `epoch` and 0-based `pos` in that epoch's md5 shuffle — ordered by
+    (u, id) with u = :func:`_uniform01` of (seed·1000003 + epoch, id).
+    All epochs rank in ONE :func:`segmented_prefix` keyed by epoch:
+    u is uniform in (0, 1) and tie-free, so fixed hash-range buckets
+    are monotone and balanced with no bounds pass, and job count is
+    O(1) in the number of epochs. Shared by :func:`training_order` and
+    the curation pipeline's fused manifest."""
+    from distributedqueryengine_spark.operators.windows import segmented_prefix
+
+    nb = max(8, min(1024, 65536 // len(epochs)))
+    per_epoch = F.explode(F.array(*[
+        F.struct(
+            F.lit(e).cast("long").alias("epoch"),
+            _uniform01(F.col("id").cast("string"), seed=seed * 1_000_003 + e)
+            .alias("__u"),
+        )
+        for e in epochs
+    ]))
+    cols = frame.columns
+    ep = (
+        frame.select(*cols, per_epoch.alias("__e"))
+        .select(*cols, "__e.epoch", "__e.__u")
+        .withColumn(
+            "__b",
+            F.least(F.floor(F.col("__u") * nb), F.lit(nb - 1)).cast("long"),
+        )
+    )
+    return (
+        segmented_prefix(ep, ["epoch"], "__u", tie="id", bucket="__b", out="pos")
+        .withColumn("pos", F.col("pos") - 1)
+        .drop("__u", "__b")
+    )
+
+
 def training_order(
     df: DataFrame,
     id_col: str,
@@ -482,41 +376,29 @@ def training_order(
     — easy examples first — and later epochs are fully shuffled.
 
     Output: one row per (epoch, id) with `pos` (0-based within epoch).
-    The permutation key is a pure function of (seed, epoch, id), so
-    shards can be materialized independently per epoch — and they ARE:
-    shuffled epochs rank through ONE combined two-phase pass (r15):
-    the md5 key is uniform and tie-free, so fixed hash-range buckets
-    per (epoch, bucket) are monotone and balanced with no stats pass —
-    job count is O(1) in n_epochs, and no one-partition-per-epoch
-    window ever plans. Curriculum epochs
-    (r14 — previously the remaining fixture-scale single-window path)
-    rank through the same skew-adaptive segment machinery
-    (`_rank_segments`): the curriculum value (numeric-castable) is the
-    segment key, and the tie-break id is the md5-hex permutation key
-    concatenated with the stringified id — orderable, unique, and
-    exactly the (difficulty asc, shuffle, id) order the curriculum
-    wants. Difficulty columns with FEW distinct levels (the common
-    case) are maximally tie-heavy, which is precisely the distribution
-    the r14 id-boundary refinement balances.
+    Shuffled epochs rank through :func:`_epoch_positions`. Curriculum
+    epochs rank through one :func:`segmented_prefix` keyed by epoch:
+    the curriculum value (numeric-castable; NULL sorts first) is the
+    order key, and the tie-break is the md5 of (seed, epoch, id) as
+    bytes followed by the id's string bytes — unique, and exactly the
+    (difficulty asc, shuffle, id) order the curriculum wants. Few
+    difficulty levels (the common case) is maximally tie-heavy, and
+    the tie bytes are uniform, so the tie split balances the windows.
     """
     if n_epochs < 1:
         raise ValueError(f"n_epochs must be >= 1, got {n_epochs}")
-    from pyspark.sql.window import Window
-
-    from distributedqueryengine_spark.operators.windows import (
-        _rank_segments,
-    )
+    from distributedqueryengine_spark.operators.windows import segmented_prefix
 
     base = df.select(F.col(id_col).alias("id"), *(
         [(F.col(curriculum_col) if isinstance(curriculum_col, str)
           else curriculum_col).alias("__cur")] if curriculum_col is not None else []
     ))
-    n_curr = curriculum_epochs if curriculum_col is not None else 0
+    n_curr = min(curriculum_epochs, n_epochs) if curriculum_col is not None else 0
     if n_curr > 0:
         # the curriculum segments on cast("double"); a non-numeric
         # curriculum (string tiers like 'easy'/'hard') would cast to
         # NULL and silently degrade ordering to a pure shuffle — fail
-        # loudly instead (r14 ADVICE). One bounded existence probe.
+        # loudly instead. One bounded existence probe.
         bad = (
             base.filter(
                 F.col("__cur").isNotNull()
@@ -533,120 +415,73 @@ def training_order(
                 "first: curriculum_col=categorical_curriculum(col, order)."
             )
     parts = []
-    shuffled_epochs: list = []
-    for e in range(n_epochs):
-        u = _uniform01(F.col("id").cast("string"), seed=seed * 1_000_003 + e)
-        if e < n_curr:
-            # full md5 hex ‖ id: ordering by this string equals
-            # ordering by (u, …, id-string) — hex compares numerically
-            # at fixed length — so the shuffle-within-difficulty stays
-            # a pure function of (seed, epoch, id)
-            perm_key = F.md5(
-                F.concat_ws(
-                    "§",
-                    F.lit(str(seed * 1_000_003 + e)),
-                    F.col("id").cast("string"),
-                )
-            )
-            sid = F.concat_ws("§", perm_key, F.col("id").cast("string"))
-            ksrc = base.select(
-                "id",
-                F.col("__cur").cast("double").alias("__k"),
-                sid.alias("__sid"),
-            )
-            b, segs = _rank_segments(
-                ksrc, "__sid", 1024, None, nulls_first=True
-            )
-            if not segs:
-                continue
-            base_rows, acc2 = [], 0
-            for seg_id, cnt, _m in segs:
-                base_rows.append((seg_id, acc2))
-                acc2 += cnt
-            bases = df.sparkSession.createDataFrame(
-                base_rows, "__seg long, __base long"
-            )
-            w = Window.partitionBy("__seg").orderBy(
-                F.col("__k").asc_nulls_first(), F.col("__sid").asc()
-            )
-            parts.append(
-                b.join(F.broadcast(bases), "__seg")
-                .select(
-                    F.lit(e).cast("long").alias("epoch"),
-                    "id",
-                    (F.col("__base") + F.row_number().over(w) - 1).alias("pos"),
-                )
-            )
-        else:
-            shuffled_epochs.append((e, u))
-    # All shuffled epochs rank in ONE two-phase pass (r15 — replaces
-    # one distributed_global_rank per epoch, whose per-epoch stats
-    # collects made jobs scale with n_epochs): the md5 permutation key
-    # is uniform in (0,1) and tie-free by construction (ties break by
-    # id within an identical u — possible only at 60-bit collisions),
-    # so fixed hash-range sub-buckets per epoch are monotone in the
-    # rank order AND balanced with NO stats pass — the same argument
-    # as apply_mixture_rates' two-phase path. One (epoch, bucket)
-    # count aggregate → driver prefix → one windowed pass partitioned
-    # by (epoch, bucket). Jobs are O(1) in n_epochs.
-    if shuffled_epochs:
-        nb = max(8, min(1024, 65536 // len(shuffled_epochs)))
-        eparts = [
-            base.select(
-                F.lit(e).cast("long").alias("epoch"),
-                "id",
-                ue.alias("__u"),
-            )
-            for e, ue in shuffled_epochs
-        ]
-        allr = eparts[0]
-        for p in eparts[1:]:
-            allr = allr.unionByName(p)
-        allr = allr.withColumn(
-            "__b",
-            F.least(F.floor(F.col("__u") * nb), F.lit(nb - 1)).cast("long"),
-        )
-        # r17: the (epoch, bucket) counts no longer collect — the
-        # exclusive prefix is ONE bounded window over the ≤n_epochs·nb
-        # row counts frame, broadcast-joined back (zero construction
-        # jobs; identical positions)
-        wbk = (
-            Window.partitionBy("epoch")
-            .orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        bases = (
-            allr.groupBy("epoch", "__b")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .select(
-                "epoch", "__b",
-                F.coalesce(F.sum("__c").over(wbk), F.lit(0))
-                .cast("long").alias("__base"),
-            )
-        )
-        w = Window.partitionBy("epoch", "__b").orderBy(
-            F.col("__u").asc(), F.col("id").asc()
+    if n_curr > 0:
+        sid = F.col("id").cast("string")
+        cur = base.select(
+            "id",
+            F.explode(F.sequence(F.lit(0).cast("long"), F.lit(n_curr - 1)))
+            .alias("epoch"),
+            F.col("__cur").cast("double").alias("__k"),
+        ).withColumn(
+            "__sid",
+            F.concat(
+                F.unhex(F.md5(F.concat_ws(
+                    "§", (F.lit(seed * 1_000_003) + F.col("epoch")).cast("string"), sid
+                ))),
+                sid.cast("binary"),
+            ),
         )
         parts.append(
-            allr.join(F.broadcast(bases), ["epoch", "__b"])
-            .select(
-                "epoch",
-                "id",
-                (F.col("__base") + F.row_number().over(w) - 1).alias("pos"),
-            )
+            segmented_prefix(cur, ["epoch"], "__k", tie="__sid", out="pos")
+            .select("epoch", "id", (F.col("pos") - 1).alias("pos"))
         )
-    if not parts:  # empty input, all-curriculum epochs — keep the
-        # input's NATIVE id type so downstream joins/unions line up
-        # (r14 ADVICE: the hardcoded `id string` diverged for long ids)
-        return base.select(
-            F.lit(0).cast("long").alias("epoch"),
-            "id",
-            F.lit(0).cast("long").alias("pos"),
-        ).limit(0)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    if n_curr < n_epochs:
+        parts.append(
+            _epoch_positions(base.select("id"), range(n_curr, n_epochs), seed)
+            .select("epoch", "id", "pos")
+        )
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+
+
+def _mixture(
+    df: DataFrame,
+    group_col: str,
+    id_col: str,
+    seed: int,
+    n_buckets: int,
+    rates_of,
+) -> DataFrame:
+    """Keep the first ceil(rate_g · n_g) rows of each group in
+    (md5(seed, id), id) order, as one :func:`segmented_prefix` keyed
+    by the group. `rates_of` maps the per-group row totals
+    (group_col, `__total`) to a (group_col, rate) frame; groups it
+    omits keep nothing. The md5 key is uniform and tie-free, so fixed
+    hash-range buckets of its 60-bit prefix are monotone in the rank
+    and balanced without a bounds pass; a mixture's few large groups
+    never rank through #groups window tasks."""
+    from distributedqueryengine_spark.operators.windows import (
+        null_safe_join,
+        segmented_prefix,
+    )
+
+    key = F.md5(
+        F.concat_ws("§", F.lit(str(seed)), F.col(id_col).cast("string"))
+    )
+    u = F.conv(F.substring(key, 1, 15), 16, 10).cast("double") / F.lit(_TWO60)
+    b = df.withColumn("__mk", key).withColumn(
+        "__mb",
+        F.least(F.floor(u * F.lit(n_buckets)), F.lit(n_buckets - 1)).cast("long"),
+    )
+
+    def quotas(totals: DataFrame) -> DataFrame:
+        return null_safe_join(totals, rates_of(totals), [group_col]).select(
+            group_col, F.ceil(F.col("rate") * F.col("__total")).alias("__limit")
+        )
+
+    return segmented_prefix(
+        b, [group_col], "__mk", tie=id_col, limit=quotas, bucket="__mb",
+        out="__rn",
+    ).drop("__mk", "__mb", "__rn")
 
 
 def apply_mixture_rates(
@@ -655,154 +490,34 @@ def apply_mixture_rates(
     group_col: str,
     id_col: str,
     seed: int = 0,
-    max_driver_groups: int = 1024,
 ) -> DataFrame:
     """Materialize a mixture: keep exactly ceil(rate_g * n_g) rows of
     each group, chosen by a content-independent md5 rank (pure function
     of (seed, id) — deterministic across engines, reruns, and cluster
     layouts). `rates` is a (group, rate) table, e.g. from
     :func:`temperature_mixture_rates`; groups absent from it keep
-    nothing, rates >= 1 keep everything. `rates` must have ONE row per
-    group — duplicates raise (r15: the two rank paths would otherwise
-    disagree on them).
+    nothing, rates >= 1 keep everything, and a NULL group matches a
+    NULL rate row. `rates` must have ONE row per group — duplicates
+    raise (one bounded job over the rate table at construction).
 
-    Scale shape (r14): a mixture typically has FEW groups (a handful
-    of sources/languages), so the obvious
-    ``row_number over (partition by group)`` serializes the whole
-    corpus through #groups tasks — the hot-partition shape
-    distributed_global_rank exists to kill. When the group count fits
-    the driver (≤ ``max_driver_groups``), ranking goes two-phase
-    instead: the md5 rank key is uniform in (0,1) and tie-free by
-    construction, so fixed hash-range sub-buckets per group are both
-    monotone in the rank order AND balanced (no value-skew refinement
-    needed); per-(group, bucket) counts aggregate map-side to a
-    driver-bounded table, quotas and exclusive prefixes are driver
-    arithmetic, sub-buckets entirely past their group's quota are
-    pruned before the scan, and each surviving sub-bucket finishes
-    its own bounded window. High-cardinality group columns (where the
-    per-group window parallelizes fine on its own) keep the one-window
-    path. Both paths return IDENTICAL rows (pinned in
-    tests/test_sampling.py).
+    Scale shape: see :func:`_mixture` — per-(group, hash-bucket)
+    counts, quotas and exclusive prefixes all ride the plan, and each
+    bucket ranks its own rows.
     """
-    from pyspark.sql.window import Window
-
     r = rates.select(F.col("group").alias(group_col), "rate")
-    key = F.md5(
-        F.concat_ws("§", F.lit(str(seed)), F.col(id_col).cast("string"))
-    )
-    rate_rows = r.limit(max_driver_groups + 1).collect()
-    if len(rate_rows) > max_driver_groups:
-        # duplicate groups in `rates` would duplicate every row of the
-        # group through the broadcast join (while the driver-dict path
-        # would collapse them) — the 'both paths return IDENTICAL
-        # rows' contract requires unique group keys, so validate here
-        # too (one tiny job over the groups-sized rate table; r14
-        # ADVICE)
-        dup = (
-            r.groupBy(group_col)
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                f"rates has duplicate rows for group "
-                f"{dup[0][group_col]!r}; dedup the rate table (one row "
-                "per group) before applying"
-            )
-        w = Window.partitionBy(group_col).orderBy(key, F.col(id_col))
-        cw = Window.partitionBy(group_col)
-        return (
-            df.join(F.broadcast(r), group_col)
-            .withColumn("__rn", F.row_number().over(w))
-            .withColumn("__n", F.count(F.lit(1)).over(cw))
-            .filter(F.col("__rn") <= F.ceil(F.col("rate") * F.col("__n")))
-            .drop("__rn", "__n", "rate")
-        )
-    if len({row[group_col] for row in rate_rows}) < len(rate_rows):
-        seen: set = set()
-        dup_g = next(
-            row[group_col] for row in rate_rows
-            if row[group_col] in seen or seen.add(row[group_col])
-        )
-        raise ValueError(
-            f"rates has duplicate rows for group {dup_g!r}; dedup the "
-            "rate table (one row per group) before applying"
-        )
-    rate_by_group = {row[group_col]: row["rate"] for row in rate_rows}
-    if not rate_by_group:
-        return df.join(F.broadcast(r), group_col).drop("rate").limit(0)
-    n_buckets = max(8, min(256, 65536 // len(rate_by_group)))
-    # u = the md5 key's 60-bit prefix: monotone in (md5, id) order —
-    # hex strings compare like their numeric value — so hash-range
-    # buckets are monotone in the per-group rank, and uniform, so no
-    # skew refinement is needed (contrast _rank_segments, whose value
-    # domain is adversarial)
-    u = F.conv(F.substring(key, 1, 15), 16, 10).cast("double") / F.lit(_TWO60)
-    b = df.join(F.broadcast(r.select(group_col)), group_col).withColumn(
-        "__mb",
-        F.least(F.floor(u * F.lit(n_buckets)), F.lit(n_buckets - 1)).cast("long"),
-    )
-    counts = (
-        b.groupBy(group_col, "__mb")
+    dup = (
+        r.groupBy(group_col)
         .agg(F.count(F.lit(1)).alias("c"))
+        .filter(F.col("c") > 1)
+        .limit(1)
         .collect()
     )
-    per_group: dict = {}
-    for row in counts:
-        per_group.setdefault(row[group_col], {})[row["__mb"]] = row["c"]
-    return _mixture_materialize(
-        b, per_group, rate_by_group, group_col, id_col, key
-    )
-
-
-def _mixture_materialize(
-    b: DataFrame,
-    per_group: dict,
-    rate_by_group: dict,
-    group_col: str,
-    id_col: str,
-    key: Column,
-) -> DataFrame:
-    """Shared tail of the two-phase mixture paths: driver quotas +
-    exclusive prefixes from the (group, bucket) counts, pre-scan
-    pruning of sub-buckets past their quota, one bounded window per
-    surviving sub-bucket. `b` must already carry `__mb`."""
-    base_rows = []
-    for g, buckets in per_group.items():
-        n_g = sum(buckets.values())
-        quota = math.ceil(rate_by_group[g] * n_g)
-        acc = 0
-        for mb in sorted(buckets):
-            if acc < quota:
-                # sub-buckets whose exclusive base already meets the
-                # quota can never contribute — prune pre-scan
-                base_rows.append((g, mb, acc, quota))
-            acc += buckets[mb]
-    if not base_rows:
-        return b.drop("__mb").limit(0)
-    from pyspark.sql.types import LongType, StructField, StructType
-    from pyspark.sql.window import Window
-
-    bases = b.sparkSession.createDataFrame(
-        base_rows,
-        StructType(
-            [
-                StructField(group_col, b.schema[group_col].dataType),
-                StructField("__mb", LongType()),
-                StructField("__base", LongType()),
-                StructField("__quota", LongType()),
-            ]
-        ),
-    )
-    w = Window.partitionBy(group_col, "__mb").orderBy(key, F.col(id_col))
-    return (
-        b.join(F.broadcast(bases), [group_col, "__mb"])
-        .withColumn("__rn", F.col("__base") + F.row_number().over(w))
-        .filter(F.col("__rn") <= F.col("__quota"))
-        .drop("__mb", "__base", "__quota", "__rn")
-    )
+    if dup:
+        raise ValueError(
+            f"rates has duplicate rows for group {dup[0][group_col]!r}; "
+            "dedup the rate table (one row per group) before applying"
+        )
+    return _mixture(df, group_col, id_col, seed, 64, lambda _t: r)
 
 
 def apply_temperature_mixture(
@@ -811,129 +526,25 @@ def apply_temperature_mixture(
     id_col: str,
     temperature: float = 1.0,
     seed: int = 0,
-    max_driver_groups: int = 1024,
     n_buckets: int = 64,
-    lazy_quotas: bool = False,
 ) -> DataFrame:
-    """Fused temperature_mixture_rates ∘ apply_mixture_rates (r15):
-    identical output rows, ONE corpus aggregate instead of two.
+    """Fused temperature_mixture_rates ∘ apply_mixture_rates: identical
+    output rows, ONE corpus aggregate instead of two. The split form
+    aggregates group sizes, then (group, bucket) counts — but the
+    second aggregate already CONTAINS the group sizes. Here the rates
+    come from :func:`temperature_mixture_rates` over the per-group
+    totals of the mixture's own stats frame — the same Spark
+    expressions, so the 6dp rate rounding is bit-identical to the
+    split form (pinned in tests/test_sampling.py) — and ride the plan
+    with the quotas, so construction runs no job. The quota/bases
+    broadcast is groups × n_buckets rows."""
+    def rates_of(totals: DataFrame) -> DataFrame:
+        return temperature_mixture_rates(
+            totals.select(F.col(group_col).alias("group"), "__total"),
+            "group", temperature=temperature, weight_col="__total",
+        ).select(F.col("group").alias(group_col), "rate")
 
-    The split form pays two full passes — temperature_mixture_rates
-    aggregates group sizes, then apply_mixture_rates aggregates
-    (group, bucket) counts — but the second aggregate already CONTAINS
-    the group sizes (sum over a group's buckets). Here the (group,
-    bucket) counts collect once, the group sizes derive driver-side,
-    and the rate arithmetic re-runs temperature_mixture_rates over a
-    LOCAL groups-sized frame — the same Spark expressions, so the 6dp
-    rate rounding is bit-identical to the split form (python round()
-    is banker's; Spark's is HALF_UP — driver-python rates would
-    diverge on .0000005 boundaries). Materialization reuses the exact
-    two-phase tail, so fused ≡ split is structural (pinned in
-    tests/test_sampling.py).
-
-    Groups beyond ``max_driver_groups`` fall back to the split form's
-    high-cardinality window path (where per-group windows parallelize
-    fine on their own). The counts collect is LIMIT-bounded at
-    max_driver_groups × n_buckets rows (r16 ADVICE: an unbounded
-    collect meant a million-group column could OOM the driver BEFORE
-    the cardinality check ran) — exceeding the bound proves
-    high cardinality without transferring the overflow, at zero extra
-    jobs.
-
-    ``lazy_quotas=True`` (r17): the (group, bucket) counts, the
-    temperature rates, every group's ceil(rate·n) quota and the
-    exclusive bucket prefixes ALL ride the final plan as bounded
-    broadcast frames — zero construction-time jobs, identical rows
-    (the rate arithmetic is the same Spark expressions over the same
-    counts; pinned in tests/test_sampling.py). No high-cardinality
-    fallback on this path: the caller asserts a bounded group catalog
-    (a curation corpus has dozens of sources, not millions) — the
-    quota/bases broadcast is groups×n_buckets rows."""
-    spark = df.sparkSession
-    key = F.md5(
-        F.concat_ws("§", F.lit(str(seed)), F.col(id_col).cast("string"))
-    )
-    u = F.conv(F.substring(key, 1, 15), 16, 10).cast("double") / F.lit(_TWO60)
-    b = df.withColumn(
-        "__mb",
-        F.least(F.floor(u * F.lit(n_buckets)), F.lit(n_buckets - 1)).cast("long"),
-    )
-    if lazy_quotas:
-        from pyspark.sql.window import Window
-
-        counts = b.groupBy(group_col, "__mb").agg(
-            F.count(F.lit(1)).alias("__c")
-        )
-        sizes = counts.groupBy(group_col).agg(F.sum("__c").alias("n"))
-        quotas = temperature_mixture_rates(
-            sizes.select(F.col(group_col).alias("group"), "n"),
-            "group", temperature=temperature, weight_col="n",
-        ).select(
-            F.col("group").alias(group_col),
-            F.ceil(F.col("rate") * F.col("n_rows")).alias("__quota"),
-        )
-        wmb = (
-            Window.partitionBy(group_col)
-            .orderBy("__mb")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        bases = (
-            counts.withColumn(
-                "__base",
-                F.coalesce(F.sum("__c").over(wmb), F.lit(0)).cast("long"),
-            )
-            .join(F.broadcast(quotas), group_col)
-            .filter(F.col("__base") < F.col("__quota"))
-            .select(group_col, "__mb", "__base", "__quota")
-        )
-        wr = Window.partitionBy(group_col, "__mb").orderBy(
-            key, F.col(id_col)
-        )
-        return (
-            b.join(F.broadcast(bases), [group_col, "__mb"])
-            .withColumn("__rn", F.col("__base") + F.row_number().over(wr))
-            .filter(F.col("__rn") <= F.col("__quota"))
-            .drop("__mb", "__base", "__quota", "__rn")
-        )
-    bound = max(max_driver_groups, 0) * n_buckets
-    counts = (
-        b.groupBy(group_col, "__mb")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .limit(bound + 1)
-        .collect()
-    )
-    per_group: dict = {}
-    if len(counts) <= bound:
-        for row in counts:
-            per_group.setdefault(row[group_col], {})[row["__mb"]] = row["c"]
-    if len(counts) > bound or len(per_group) > max_driver_groups:
-        rates = temperature_mixture_rates(
-            df.select(F.col(group_col).alias("group")), "group",
-            temperature=temperature,
-        )
-        return apply_mixture_rates(
-            df, rates, group_col, id_col, seed=seed, max_driver_groups=0
-        )
-    if not per_group:
-        return b.drop("__mb").limit(0)
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    local = spark.createDataFrame(
-        [(g, sum(v.values())) for g, v in per_group.items()],
-        StructType([
-            StructField("group", b.schema[group_col].dataType),
-            StructField("n", LongType()),
-        ]),
-    )
-    rate_by_group = {
-        r["group"]: r["rate"]
-        for r in temperature_mixture_rates(
-            local, "group", temperature=temperature, weight_col="n"
-        ).collect()
-    }
-    return _mixture_materialize(
-        b, per_group, rate_by_group, group_col, id_col, key
-    )
+    return _mixture(df, group_col, id_col, seed, n_buckets, rates_of)
 
 
 def select_until_budget_grouped(
@@ -944,12 +555,6 @@ def select_until_budget_grouped(
     weight_col: str = "w",
     score_col: str = "score",
     n_buckets: int = 1024,
-    min_heavy: int = 65536,
-    max_driver_groups: int = 1024,
-    heavy_factor: float = 4.0,
-    max_rounds: int = 3,
-    sub_cap: int = 4096,
-    lazy_prefix: bool = False,
 ) -> DataFrame:
     """Per-group maximal-prefix budget selection: for each group g,
     take rows in (score desc, id asc) order while the group's running
@@ -959,313 +564,47 @@ def select_until_budget_grouped(
     budget starves low-resource languages; per-language budgets are
     how multilingual mixes are actually specified).
 
-    Single-pass shape (r15 — replaces the r14 per-group driver loop
-    whose job count scaled with #groups): segment by the
-    (group, score-range) COMPOSITE in one `_rank_segments`-style pass.
-    One aggregate collects per-group [min, max] score bounds (groups-
-    sized), one aggregate collects per-(group, segment) row/weight
-    stats, the driver computes every group's exclusive prefix from
-    that ONE combined table (pruning segments whose base already
-    exceeds their group's budget), and ONE windowed pass partitioned
-    by (group, segment) finishes the running totals for every group
-    simultaneously. Job count is INDEPENDENT of the number of groups
-    (pinned in tests/test_sampling.py); the driver holds only
-    groups-sized and (groups × segments)-sized stats tables, with the
-    per-group segment count scaled down as groups grow so the collect
-    stays bounded (≤ ~64k rows at the 1024-group cap).
+    Single pass for all groups: one :func:`segmented_prefix` keyed by
+    the group, so job count is independent of the number of groups
+    (pinned in tests/test_sampling.py) and tied scores split by id
+    range inside each group. The per-group segment count scales down
+    as groups grow (max(64, 65536 // #groups), capped at
+    ``n_buckets``), so the stats frame stays about 64k rows.
 
-    Skew: the same refinement contract as :func:`select_until_budget`
-    — a (group, segment) cell holding more than
-    max(heavy_factor · n_g / n_buckets, min_heavy) rows is re-split,
-    by finer score ranges when multi-valued and at sampled id
-    boundaries when score-tied, all heavy cells across ALL groups in
-    one round-trip per round. Selection values are invariant to where
-    boundaries land; refinement only moves load.
-
-    Weight dtype follows :func:`select_until_budget`'s r15 contract:
-    integral weights → long cum, fractional weights → double cum.
-    Groups absent from `budgets` select nothing; a group absent from
-    the data contributes nothing. Returns (group, id, score, weight,
-    cum) with cum the within-group running total.
-
-    ``lazy_prefix=True`` (r17): zero construction-time collects — the
-    per-group bounds, the (group × segment) stats and every group's
-    exclusive prefix all ride the final plan as bounded broadcast
-    frames (see :func:`_budget_prefix_lazy`); identical rows, no skew
-    refinement (callers assert spread scores — the suite contract).
+    Weight dtype follows :func:`select_until_budget`: integral weights
+    → long cum, fractional weights → double cum. Groups absent from
+    `budgets` select nothing; a group absent from the data contributes
+    nothing; a ``None`` budget key budgets the NULL group. Returns
+    (group, id, score, weight, cum) with cum the within-group running
+    total.
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-    from pyspark.sql.window import Window
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    from distributedqueryengine_spark.functions.dedup import _scoped_persist
-
-    if len(budgets) > max_driver_groups:
-        raise ValueError(
-            f"select_until_budget_grouped collects (group × segment) "
-            f"stats to the driver ({len(budgets)} > "
-            f"max_driver_groups={max_driver_groups}); for higher-"
-            "cardinality grouping use a rate-based mixture "
-            "(apply_mixture_rates) instead"
-        )
-    spark = df.sparkSession
     wt_type = _weight_sql_type(df, weight_col)
-    zero = 0 if wt_type == "long" else 0.0
-    src = _scoped_persist(
-        df.select(
-            F.col(group_col).alias("grp"),
-            F.col(id_col).alias("id"),
-            F.col(score_col).cast("double").alias("score"),
-            F.col(weight_col).cast(wt_type).alias("w"),
-        ).filter(
-            F.col("grp").isin(list(budgets))
-            & F.col("id").isNotNull()
-            & F.col("score").isNotNull()
-            & ~F.isnan("score")
-            & F.col("w").isNotNull()
-        )
+    named = [g for g in budgets if g is not None]
+    wanted = F.col(group_col).isin(named)
+    if None in budgets:
+        wanted = wanted | F.col(group_col).isNull()
+    src = _budget_source(
+        df.filter(wanted), id_col, score_col, weight_col, wt_type,
+        F.col(group_col).alias("grp"),
     )
-
-    def _empty() -> DataFrame:
-        return src.select(
-            F.col("grp").alias(group_col), "id", "score",
-            F.col("w").alias("weight"),
-            F.lit(zero).cast(wt_type).alias("cum"),
-        ).limit(0)
-
-    if not budgets:
-        return _empty()
-    # scale per-group segment count down as groups grow so the
-    # (group × segment) stats collect stays driver-bounded
-    nb = max(64, min(n_buckets, 65536 // len(budgets)))
-    grp_type = src.schema["grp"].dataType
-    b = src.withColumn("__k", -F.col("score"))
-    if lazy_prefix:
-        return _budget_prefix_lazy(
-            b.withColumnRenamed("w", "wt"), budgets, wt_type, nb,
-            group_col=group_col,
-        )
-
-    # pass 1 — ONE aggregate: per-group value bounds (groups-sized)
-    gstats = b.groupBy("grp").agg(
-        F.min("__k").alias("lo"), F.max("__k").alias("hi")
-    ).collect()
-    if not gstats:
-        return _empty()
-    gparams = [
-        (
-            r["grp"],
-            float(r["lo"]),
-            ((r["hi"] - r["lo"]) / float(nb)) if r["hi"] > r["lo"] else None,
-        )
-        for r in gstats
-    ]
-    gtbl = spark.createDataFrame(
-        gparams,
-        StructType([
-            StructField("grp", grp_type),
-            StructField("__glo", DoubleType()),
-            StructField("__gw", DoubleType()),
-        ]),
-    )
-    seg0 = (
-        F.when(F.col("__gw").isNull(), F.lit(0))
-        .otherwise(
-            F.least(
-                F.floor((F.col("__k") - F.col("__glo")) / F.col("__gw")),
-                F.lit(nb - 1),
-            )
-        )
-        .cast("long")
-    )
-    b = (
-        b.join(F.broadcast(gtbl), "grp")
-        .withColumn("__seg", seg0)
-        .drop("__glo", "__gw")
-    )
-
-    # refinement param-table schema: keyed by (grp, old seg)
-    pschema = StructType([
-        StructField("grp", grp_type),
-        StructField("__seg", LongType()),
-        StructField("__nb", LongType()),
-        StructField("__kind", IntegerType()),
-        StructField("__lo", DoubleType()),
-        StructField("__w", DoubleType()),
-        StructField("__nsub", IntegerType()),
-        StructField("__bnds", ArrayType(src.schema["id"].dataType)),
-    ])
-    persisted = False
-    segs: list = []
-    for rnd in range(max_rounds + 1):
-        # pass 2 — ONE aggregate: per-(group, segment) stats
-        segs = sorted(
-            b.groupBy("grp", "__seg")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum("w").alias("m"),
-                F.min("__k").alias("lo"),
-                F.max("__k").alias("hi"),
-            )
-            .collect(),
-            key=lambda r: (str(r["grp"]), r["__seg"]),
-        )
-        n_by_grp: dict = {}
-        for r in segs:
-            n_by_grp[r["grp"]] = n_by_grp.get(r["grp"], 0) + r["cnt"]
-        heavy = {
-            (r["grp"], int(r["__seg"]))
-            for r in segs
-            if r["cnt"]
-            > max(heavy_factor * n_by_grp[r["grp"]] / float(nb),
-                  float(min_heavy))
-        }
-        if not heavy or rnd == max_rounds:
-            break
-        if not persisted:
-            b = _scoped_persist(b)
-            persisted = True
-        target = max(
-            int(max(heavy_factor * max(n_by_grp.values()) / float(nb),
-                    float(min_heavy)) // 2),
-            1,
-        )
-        tied = [
-            r for r in segs
-            if (r["grp"], int(r["__seg"])) in heavy
-            and r["lo"] == r["hi"]
-        ]
-        bnds_by_cell: dict = {}
-        if tied:
-            # one sample job covers ALL tied cells across all groups
-            mod_tbl = spark.createDataFrame(
-                [(r["grp"], int(r["__seg"]), max(1, int(r["cnt"]) // 2000))
-                 for r in tied],
-                StructType([
-                    StructField("grp", grp_type),
-                    StructField("__seg", LongType()),
-                    StructField("__mod", LongType()),
-                ]),
-            )
-            samp = (
-                b.join(F.broadcast(mod_tbl), ["grp", "__seg"])
-                .filter(F.pmod(F.xxhash64(F.col("id")), F.col("__mod")) == 0)
-                .groupBy("grp", "__seg")
-                .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-                .collect()
-            )
-            samp_ids = {(r["grp"], int(r["__seg"])): list(r["ids"])
-                        for r in samp}
-            for r in tied:
-                cell = (r["grp"], int(r["__seg"]))
-                ids = samp_ids.get(cell, [])
-                k = min(-(-int(r["cnt"]) // target), sub_cap, len(ids) + 1)
-                bnds: list = []
-                for j in range(1, k):
-                    cand = ids[(j * len(ids)) // k]
-                    if not bnds or cand > bnds[-1]:
-                        bnds.append(cand)
-                bnds_by_cell[cell] = bnds
-        params = []
-        nxt_by_grp: dict = {}
-        for r in segs:
-            g, s = r["grp"], int(r["__seg"])
-            nxt = nxt_by_grp.get(g, 0)
-            if (g, s) not in heavy:
-                params.append((g, s, nxt, 0, None, None, 1, None))
-                nxt += 1
-            elif r["lo"] == r["hi"]:
-                bnds = bnds_by_cell.get((g, s), [])
-                params.append((g, s, nxt, 2, None, None, len(bnds) + 1, bnds))
-                nxt += len(bnds) + 1
-            else:
-                k = min(-(-int(r["cnt"]) // target), sub_cap)
-                wdt = (r["hi"] - r["lo"]) / float(k)
-                params.append((g, s, nxt, 1, float(r["lo"]), wdt, k, None))
-                nxt += k
-            nxt_by_grp[g] = nxt
-        ptbl = spark.createDataFrame(params, pschema)
-        sub = (
-            F.when(
-                F.col("__kind") == 1,
-                F.least(
-                    F.floor((F.col("__k") - F.col("__lo")) / F.col("__w")),
-                    (F.col("__nsub") - 1).cast("long"),
-                ),
-            )
-            .when(
-                F.col("__kind") == 2,
-                F.aggregate(
-                    F.col("__bnds"),
-                    F.lit(0),
-                    lambda acc, x: acc
-                    + F.when(F.col("id") > x, 1).otherwise(0),
-                ).cast("long"),
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-        )
-        b = (
-            b.join(F.broadcast(ptbl), ["grp", "__seg"])
-            .withColumn("__seg2", F.col("__nb") + sub)
-            .drop("__seg", "__nb", "__kind", "__lo", "__w", "__nsub",
-                  "__bnds")
-            .withColumnRenamed("__seg2", "__seg")
-        )
-
-    # driver prefix: every group's exclusive cumsum from the ONE
-    # combined stats table, pruning segments past their group's budget
-    base_rows = []
-    acc_by_grp: dict = {}
-    for r in segs:
-        g = r["grp"]
-        budget = budgets[g]
-        acc = acc_by_grp.get(g, zero)
-        if acc <= budget:
-            base_rows.append((g, int(r["__seg"]), acc, budget))
-        acc_by_grp[g] = acc + (
-            int(r["m"]) if wt_type == "long" else float(r["m"])
-        )
-    if not base_rows:
-        return _empty()
-    budget_field = LongType() if wt_type == "long" else DoubleType()
-    bases = spark.createDataFrame(
+    btbl = df.sparkSession.createDataFrame(
         [
-            (g, s, acc, int(bud) if wt_type == "long" else float(bud))
-            for g, s, acc, bud in base_rows
+            (g, int(v) if wt_type == "long" else float(v))
+            for g, v in budgets.items()
         ],
         StructType([
-            StructField("grp", grp_type),
-            StructField("__seg", LongType()),
-            StructField("__base", budget_field),
-            StructField("__budget", budget_field),
+            StructField("grp", src.schema["grp"].dataType),
+            StructField(
+                "__limit", LongType() if wt_type == "long" else DoubleType()
+            ),
         ]),
     )
-    w = (
-        Window.partitionBy("grp", "__seg")
-        .orderBy(F.col("score").desc(), F.col("id").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        b.join(F.broadcast(bases), ["grp", "__seg"])
-        .withColumn(
-            "cum",
-            F.col("__base")
-            + F.coalesce(F.sum("w").over(w), F.lit(zero))
-            + F.col("w"),
-        )
-        .filter(F.col("cum") <= F.col("__budget"))
-        .select(
-            F.col("grp").alias(group_col), "id", "score",
-            F.col("w").alias("weight"), "cum",
-        )
-    )
+    nb = max(64, min(n_buckets, 65536 // max(len(budgets), 1)))
+    return _budget_prefix(
+        src, ["grp"], lambda _totals: btbl, nb
+    ).withColumnRenamed("grp", group_col)
 
 
 def categorical_curriculum(

@@ -736,21 +736,6 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
             _SKETCH_SHARED_CACHE.pop().unpersist()
         except Exception:
             pass
-    # r17: ONE FileScan per base table for the whole suite. The union's
-    # branches each re-scanned lineitem (bounds window, percentile_approx
-    # aggregate, bottom-k state build) and orders (hll/kmv aggregates,
-    # bloom probe) — 3 parquet scans each; now a projected persist per
-    # table (4 / 3 narrow columns) feeds every branch. Verification-side
-    # only: at 100 TB you run approx_sketches_sketch_only, whose single
-    # aggregate needs no cache (see the scale note above).
-    li = li.select(
-        "l_returnflag", "l_extendedprice", "l_orderkey", "l_linenumber"
-    ).persist()
-    _SKETCH_SHARED_CACHE.append(li)
-    orders = orders.select(
-        "o_orderstatus", "o_custkey", "o_orderkey"
-    ).persist()
-    _SKETCH_SHARED_CACHE.append(orders)
     ex = orders.groupBy("o_orderstatus").agg(
         F.count_distinct("o_custkey").alias("exact"),
         F.approx_count_distinct("o_custkey", 0.05).alias("approx"),
@@ -807,13 +792,8 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_percentiles_grouped,
     )
 
-    # two_phase=False (r17): the BOUNDED verification side keeps the
-    # single-window form (one exchange+sort, measured ~1s cheaper at
-    # sf0.1 than the two-phase rank); the scale-safe two-phase default
-    # serves the primary q_agg_percentiles path (r16 ADVICE split)
     bounds_df = exact_percentiles_grouped(
         li, "l_returnflag", "l_extendedprice", lo_ps + hi_ps + bk_bound_ps,
-        two_phase=False,
     )
     # LEFT join (r16 ADVICE): exact_percentiles_grouped omits groups
     # whose values are ALL NULL (matching F.percentile's NULL entries
@@ -1162,11 +1142,6 @@ def _budget_grouped(
     return select_until_budget_grouped(
         scored, {"en": 6000, "zh": 1500}, group_col="lang",
         id_col="doc_id", weight_col="nt", score_col="q",
-        # r17: zero construction collects — the quality-score domain is
-        # a smooth [0,1] heuristic (no single value owns >64k rows at
-        # any tested sf), so the suite takes the lazy prefix plan;
-        # identical rows pinned in tests/test_sampling.py
-        lazy_prefix=True,
     )
 
 
@@ -1186,9 +1161,6 @@ def _mixture_applied(
          else Q._t(spark, sf_dir, "documents"))
     return apply_temperature_mixture(
         d, "source", "doc_id", temperature=0.5, seed=0,
-        # r17: `source` is a bounded catalog (dozens of values at any
-        # corpus size) — take the zero-collect lazy quota plan
-        lazy_quotas=True,
     ).select("doc_id", "source")
 
 

@@ -8,11 +8,9 @@ diagram needs quantile cuts. The shapes here:
 
 - `roc_auc`: exact (ties-averaged, Mann–Whitney) AUC with NO global
   sort. Scores collapse to per-distinct-value (n_pos, n_neg) counts;
-  the cumulative negatives-below-each-score come from the same
-  two-phase prefix-sum discipline as packing/dense-ids (deterministic
-  fixed-width score buckets; since r17 the exclusive cumsum over the
-  ≤score_buckets bucket totals is ONE bounded in-plan window, so the
-  _df variant runs zero construction-time jobs); AUC is then one
+  the cumulative negatives-below-each-score come from
+  operators.windows.segmented_prefix over score order (fixed-width
+  score ranges, zero construction-time jobs); AUC is then one
   aggregate: Σ n_pos·(cum_neg_below + n_neg/2) / (N⁺·N⁻).
 - `threshold_report`: TP/FP/FN/TN + precision/recall/F1 for a literal
   threshold list — ONE conditional-sum aggregate pass over the rows,
@@ -38,9 +36,8 @@ def roc_auc_df(
     """Exact ROC AUC as a ONE-ROW DataFrame (auc, n_pos, n_neg) — the
     lazy, pipeline-composable variant of `roc_auc`. auc is NULL when a
     class is absent (undefined), with the class counts visible so the
-    caller can see why. Distributed shape per module docstring: the
-    only driver materialization is G bucket totals for the prefix-sum
-    bases (scalars, never data)."""
+    caller can see why. Distributed shape per module docstring; nothing
+    runs until the caller acts."""
     inner = roc_auc(df, score_col, label_col, score_buckets, _as_df=True)
     assert isinstance(inner, DataFrame)
     return inner
@@ -55,7 +52,7 @@ def roc_auc(
 ) -> float | DataFrame:
     """Exact ROC AUC (probability a random positive outscores a random
     negative, ties counting half). Distributed shape per module
-    docstring; the driver sees G bucket totals + the final scalar.
+    docstring; the driver sees only the final scalar.
     Raises when either class is absent (AUC undefined). Use
     `roc_auc_df` for a frame-returning variant that composes inside
     pipelines without breaking laziness."""
@@ -70,50 +67,18 @@ def roc_auc(
             F.sum(1 - F.col("y")).cast("long").alias("nn"),
         )
     )
-    # r17: fully-lazy two-phase prefix (the construction-time range +
-    # bucket-totals collects made even the "lazy" _df variant run two
-    # serial jobs per call): the score range rides a 1-row broadcast
-    # cross, the per-bucket exclusive bases come from ONE bounded
-    # window over the ≤score_buckets-row totals frame, and an empty
+    # cumulative negatives at or below each score: one lazy prefix over
+    # score order (no global sort, no construction-time job); an empty
     # input falls out of the final aggregate as the (NULL, 0, 0) row
-    # the df contract promises — zero collects until the caller acts.
-    from pyspark.sql.window import Window
+    # the df contract promises
+    from distributedqueryengine_spark.operators.windows import segmented_prefix
 
-    rng = per_score.agg(F.min("s").alias("__lo"), F.max("s").alias("__hi"))
-    width = F.greatest(
-        (F.col("__hi") - F.col("__lo")) / F.lit(float(score_buckets)),
-        F.lit(1e-300),
-    )
-    b = (
-        per_score.crossJoin(F.broadcast(rng))
-        .withColumn(
-            "__bkt",
-            F.least(
-                F.floor((F.col("s") - F.col("__lo")) / width),
-                F.lit(score_buckets - 1),
-            ).cast("long"),
-        )
-        .drop("__lo", "__hi")
-    )
-    wb = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    bases = (
-        b.groupBy("__bkt")
-        .agg(F.sum("nn").alias("__nnb"))
-        .select(
-            "__bkt",
-            F.coalesce(F.sum("__nnb").over(wb), F.lit(0))
-            .cast("long").alias("__base"),
-        )
-    )
-    w = Window.partitionBy("__bkt").orderBy("s").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
     contrib_df = (
-        b.join(F.broadcast(bases), "__bkt")
-        .withColumn(
-            "__cum_nn_below",
-            F.col("__base") + F.coalesce(F.sum("nn").over(w), F.lit(0)),
+        segmented_prefix(
+            per_score, [], "s", measure="nn", n_buckets=score_buckets,
+            out="__cum_nn",
         )
+        .withColumn("__cum_nn_below", F.col("__cum_nn") - F.col("nn"))
         .agg(
             F.sum(F.col("np") * (F.col("__cum_nn_below") + F.col("nn") / 2.0)).alias(
                 "u"

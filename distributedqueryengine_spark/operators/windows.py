@@ -117,210 +117,222 @@ def groups_frame_agg(
     return out.drop("_dr")
 
 
-def _rank_segments(
-    b: DataFrame,
-    id_col: str,
+def null_safe_join(
+    left: DataFrame, right: DataFrame, on: Sequence[str], how: str = "inner"
+) -> DataFrame:
+    """Broadcast equi-join of a small `right` frame on `on` where NULL
+    keys match NULL keys (``<=>``); `right`'s copies of the key columns
+    are dropped, so the result reads like ``left.join(right, on)``.
+    Spark rewrites ``<=>`` keys into hashable pairs, so this still plans
+    as a broadcast hash join. No keys: a broadcast cross join."""
+    if not on:
+        return left.crossJoin(F.broadcast(right))
+    r = F.broadcast(
+        right.select(
+            *[F.col(c).alias(f"__r_{c}") for c in on],
+            *[c for c in right.columns if c not in on],
+        )
+    )
+    cond = [F.col(c).eqNullSafe(F.col(f"__r_{c}")) for c in on]
+    return left.join(r, cond, how).drop(*[f"__r_{c}" for c in on])
+
+
+_FINE = 16  # finer value ranges with a tie column, to isolate a tied value
+
+
+def _segments(
+    df: DataFrame,
+    keys: list[str],
+    order: str,
+    tie: str | None,
+    m: Column,
+    bucket: str | None,
     n_buckets: int,
-    measure: Column | None,
     nulls_first: bool,
-    heavy_factor: float = 4.0,
-    min_heavy: int = 65536,
-    max_rounds: int = 3,
-    sub_cap: int = 4096,
-) -> tuple[DataFrame, list[tuple[int, int, float]]]:
-    """Skew-adaptive monotone segmentation for two-phase global ranks.
+) -> tuple[DataFrame, DataFrame, list[str]]:
+    """Cut each key's rows into segments that are monotone in
+    (order, tie) order. Returns (rows, stats, cols): `rows` carry the
+    segment columns `cols`, and `stats` holds one row per (keys…,
+    cols…) with the row count `__c` and measure total `__m`.
 
-    Input: a frame with a ``__k`` double column (the rank key,
-    ascending; NULLs allowed) and a unique, non-null ``id_col`` that
-    breaks ties. Output: the frame with a ``__seg`` long column plus
-    the ordered segment stats [(seg_id, row_count, measure_total)],
-    where segment ids ascend in global (``__k`` asc, id asc) order and
-    NULL keys occupy a dedicated first (``nulls_first``) or last
-    segment. Downstream, a per-``__seg`` window plus a driver-side
-    exclusive prefix over the stats yields an exact global rank /
-    running total with NO single-partition exchange.
-
-    Skew contract (closes the r13 tie-skew hole): fixed-width value
-    buckets alone put every row tied on one dominant value into ONE
-    bucket's window — the hot partition this machinery exists to
-    avoid. So after the bucket-stats pass, any segment holding more
-    than max(heavy_factor · n/n_buckets, min_heavy) rows is refined:
-
-    * multi-valued heavy segments re-bucket by finer value ranges
-      within their own [min, max] (monotone by construction);
-    * single-valued (tied) and all-NULL heavy segments split by id
-      boundaries drawn from a deterministic xxhash-sampled id sample
-      (ties order by id, so id-boundary sub-segments stay monotone in
-      the global order) — this works for ANY orderable id type, not
-      just numerics, and balances even when ids cluster;
-
-    repeated up to ``max_rounds`` times until nothing is heavy. Each
-    round is one bounded-size aggregation (≤ #segments rows collected)
-    plus, when tied segments exist, one ~2k-id-per-segment sample job;
-    the uniform no-skew case stays at the original single stats pass.
-    ``min_heavy`` (default 65,536) is an ABSOLUTE floor under which a
-    segment is never refined: a one-task window over <64k (value, id)
-    pairs is a few MB of sort — refinement jobs would cost more than
-    they save at any cluster size, and fixture-scale corpora stay on
-    the cheap two-job plan. The relative threshold dominates at scale
-    (4·n/n_buckets passes the floor once n > ~16M with the default
-    1024 buckets).
-    Segment assignment is embedded as literals/broadcast params, so
-    the counting pass and the final window see identical assignments,
-    and the OUTPUT rank is invariant to where the boundaries land —
-    sampling variance can only affect load balance, never values.
-
-    Caller contract: ``id_col`` values must be unique and non-null
-    (they are the tie-break), and ``__k`` must not contain NaN/±Inf
-    (cast/filter upstream — IEEE specials break width arithmetic).
-    """
-    spark = b.sparkSession
-    from distributedqueryengine_spark.functions.dedup import _scoped_persist
-
-    m = measure if measure is not None else F.count(F.lit(1))
-    stats = b.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("__k").alias("lo"),
-        F.max("__k").alias("hi"),
-    ).collect()[0]
-    if stats["n"] == 0:
-        return b.withColumn("__seg", F.lit(0).cast("long")), []
-    null_seg = -1 if nulls_first else n_buckets
-    if stats["hi"] is not None and stats["hi"] > stats["lo"]:
-        width = (stats["hi"] - stats["lo"]) / float(n_buckets)
-        vb = F.least(
-            F.floor((F.col("__k") - F.lit(stats["lo"])) / F.lit(width)),
-            F.lit(n_buckets - 1),
-        ).cast("long")
-    else:
-        # all non-null keys equal (or all NULL): one value segment;
-        # the refinement loop id-splits it if it is heavy — no id
-        # arithmetic here, so non-numeric ids are fine (r13 ADVICE)
-        vb = F.lit(0).cast("long")
-    b = b.withColumn(
-        "__seg", F.when(F.col("__k").isNull(), F.lit(null_seg)).otherwise(vb)
+    A caller-supplied `bucket` is the segment. Otherwise segments are
+    fixed-width ranges of `order` between each key's min and max, with
+    NULL order values in their own first or last segment. With a tie
+    column the ranges are `_FINE` times finer, so a value tied across
+    many rows tends to own its range, and a range that holds ONE order
+    value (or only NULLs) and more than cap = max(4·n_key/n_buckets,
+    64) rows splits into about 4·rows/cap tie ranges. Ties order by
+    the tie column, so tie ranges stay monotone. Their boundaries are
+    quantiles of an id-hash sample of the range's tie values, taken by
+    the stats aggregate itself, so they balance for any orderable id
+    type (fixed-width ranges of a numeric projection of string ids do
+    not: ASCII digits fill 10 of every 16 hex values). All of it is in
+    plan: the stats aggregate, plus one sub-total aggregate over the
+    rows of split ranges."""
+    aggs = [F.count(F.lit(1)).alias("__c"), F.sum(m).alias("__m")]
+    if bucket is not None:
+        return df, df.groupBy(*keys, bucket).agg(*aggs), [bucket]
+    nf = n_buckets * (_FINE if tie is not None else 1)
+    bounds = df.groupBy(*keys).agg(
+        F.min(order).alias("__lo"),
+        F.max(order).alias("__hi"),
+        F.count(F.lit(1)).alias("__n"),
     )
-
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    id_type = b.schema[id_col].dataType
-    pschema = StructType(
-        [
-            StructField("__seg", LongType()),
-            StructField("__nb", LongType()),
-            StructField("__kind", IntegerType()),
-            StructField("__lo", DoubleType()),
-            StructField("__w", DoubleType()),
-            StructField("__nsub", IntegerType()),
-            StructField("__bnds", ArrayType(id_type)),
-        ]
-    )
-    persisted = False
-    for rnd in range(max_rounds + 1):
-        segs = sorted(
-            b.groupBy("__seg")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                m.alias("m"),
-                F.min("__k").alias("lo"),
-                F.max("__k").alias("hi"),
-            )
-            .collect(),
-            key=lambda r: r["__seg"],
+    width = (F.col("__hi") - F.col("__lo")) / F.lit(float(nf))
+    seg = (
+        F.when(F.col(order).isNull(), F.lit(-1 if nulls_first else nf))
+        .when(
+            F.col("__hi") > F.col("__lo"),
+            F.least(
+                F.floor((F.col(order) - F.col("__lo")) / width), F.lit(nf - 1)
+            ),
         )
-        n = sum(r["cnt"] for r in segs)
-        threshold = max(heavy_factor * n / float(n_buckets), float(min_heavy))
-        heavy = {int(r["__seg"]) for r in segs if r["cnt"] > threshold}
-        if not heavy or rnd == max_rounds:
-            return b, [(int(r["__seg"]), int(r["cnt"]), r["m"]) for r in segs]
-        if not persisted:
-            # refinement adds jobs over the same rows — evaluate the
-            # upstream lineage once (FIFO-bounded shared registry)
-            b = _scoped_persist(b)
-            persisted = True
-        target = max(int(threshold // 2), 1)
-        tied = [
-            r
-            for r in segs
-            if int(r["__seg"]) in heavy
-            and (r["lo"] is None or r["lo"] == r["hi"])
-        ]
-        bnds_by_seg: dict[int, list] = {}
-        if tied:
-            # deterministic ~2k-id sample per tied segment: boundary
-            # choice only moves load, never values, but xxhash-mod
-            # keeps even the balance reproducible across layouts
-            mod_tbl = spark.createDataFrame(
-                [(int(r["__seg"]), max(1, int(r["cnt"]) // 2000)) for r in tied],
-                "__seg long, __mod long",
-            )
-            samp = (
-                b.join(F.broadcast(mod_tbl), "__seg")
-                .filter(F.pmod(F.xxhash64(F.col(id_col)), F.col("__mod")) == 0)
-                .groupBy("__seg")
-                .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-                .collect()
-            )
-            samp_ids = {int(r["__seg"]): list(r["ids"]) for r in samp}
-            for r in tied:
-                ids = samp_ids.get(int(r["__seg"]), [])
-                k = min(-(-int(r["cnt"]) // target), sub_cap, len(ids) + 1)
-                bnds: list = []
-                for j in range(1, k):
-                    cand = ids[(j * len(ids)) // k]
-                    if not bnds or cand > bnds[-1]:
-                        bnds.append(cand)
-                bnds_by_seg[int(r["__seg"])] = bnds
-        params, nxt = [], 0
-        for r in segs:
-            s = int(r["__seg"])
-            if s not in heavy:
-                params.append((s, nxt, 0, None, None, 1, None))
-                nxt += 1
-            elif r["lo"] is None or r["lo"] == r["hi"]:
-                bnds = bnds_by_seg.get(s, [])
-                params.append((s, nxt, 2, None, None, len(bnds) + 1, bnds))
-                nxt += len(bnds) + 1
-            else:
-                k = min(-(-int(r["cnt"]) // target), sub_cap)
-                wdt = (r["hi"] - r["lo"]) / float(k)
-                params.append((s, nxt, 1, float(r["lo"]), wdt, k, None))
-                nxt += k
-        ptbl = spark.createDataFrame(params, pschema)
-        sub = (
-            F.when(
-                F.col("__kind") == 1,
-                F.least(
-                    F.floor((F.col("__k") - F.col("__lo")) / F.col("__w")),
-                    (F.col("__nsub") - 1).cast("long"),
+        .otherwise(F.lit(0))
+        .cast("long")
+    )
+    joined = null_safe_join(df, bounds, keys).withColumn("__seg", seg)
+    rows = joined.drop("__lo", "__hi", "__n")
+    if tie is None:
+        return rows, rows.groupBy(*keys, "__seg").agg(*aggs), ["__seg"]
+    # cap and sample rate depend only on the key's row count, so each
+    # row knows them: ~128 sampled ids per cap rows, chosen by id hash
+    # (deterministic), gives a split range ~32 samples per tie range
+    cap = F.greatest(
+        F.lit(4.0) * F.col("__n") / F.lit(float(n_buckets)), F.lit(64.0)
+    )
+    mod = F.greatest(F.lit(1), F.floor(cap / F.lit(128))).cast("long")
+    cells = joined.groupBy(*keys, "__seg").agg(
+        *aggs,
+        F.min(order).alias("__klo"),
+        F.max(order).alias("__khi"),
+        F.first(cap).alias("__cap"),
+        F.collect_list(
+            F.when(F.pmod(F.xxhash64(F.col(tie)), mod) == 0, F.col(tie))
+        ).alias("__ids"),
+    )
+    hot = (F.col("__c") > F.col("__cap")) & F.col("__klo").eqNullSafe(
+        F.col("__khi")
+    )
+    nsub = F.ceil(F.lit(4.0) * F.col("__c") / F.col("__cap"))
+    cell = keys + ["__seg"]
+    # the sorted sample's quantiles are the tie-range boundaries
+    cuts = (
+        cells.filter(hot & (F.size("__ids") > 0))
+        .withColumn("__ids", F.sort_array("__ids"))
+        .select(
+            *cell,
+            F.transform(
+                F.sequence(F.lit(1), nsub - 1),
+                lambda j: F.element_at(
+                    "__ids", (j * F.size("__ids") / nsub).cast("int") + 1
                 ),
-            )
-            .when(
-                F.col("__kind") == 2,
-                F.aggregate(
-                    F.col("__bnds"),
-                    F.lit(0),
-                    lambda acc, x: acc
-                    + F.when(F.col(id_col) > x, 1).otherwise(0),
-                ).cast("long"),
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
+            ).alias("__bnds"),
         )
-        b = (
-            b.join(F.broadcast(ptbl), "__seg")
-            .withColumn("__seg2", F.col("__nb") + sub)
-            .drop("__seg", "__nb", "__kind", "__lo", "__w", "__nsub", "__bnds")
-            .withColumnRenamed("__seg2", "__seg")
+    )
+    rows = null_safe_join(rows, cuts, cell, "left").withColumn(
+        "__sub",
+        F.coalesce(
+            F.size(F.filter("__bnds", lambda x: x < F.col(tie))), F.lit(0)
+        ).cast("long"),
+    )
+    whole = cells.filter(~(hot & (F.size("__ids") > 0))).select(
+        *cell, F.lit(0).cast("long").alias("__sub"), "__c", "__m"
+    )
+    parts = (
+        rows.filter(F.col("__bnds").isNotNull())
+        .groupBy(*cell, "__sub")
+        .agg(*aggs)
+    )
+    return rows.drop("__bnds"), whole.unionByName(parts), ["__seg", "__sub"]
+
+
+def segmented_prefix(
+    df: DataFrame,
+    keys: Sequence[str],
+    order: str,
+    *,
+    tie: str | None = None,
+    measure: str | None = None,
+    limit=None,
+    bucket: str | None = None,
+    n_buckets: int = 1024,
+    nulls_first: bool = True,
+    out: str = "__cum",
+    total: str | None = None,
+) -> DataFrame:
+    """Exact running measure per `keys` in (`order` asc, `tie` asc)
+    order, as one lazy plan with no single-task corpus window and no
+    construction-time job — the shared engine of every prefix sum,
+    rank and budget in the package.
+
+    Adds `out`: the INCLUSIVE running row count (`measure=None`) or
+    running sum of `measure`; callers wanting the exclusive value
+    subtract the row's own measure. Keys are NULL-safe (a NULL key is
+    one group); NULL `order` values sort first (`nulls_first`) or last.
+    No keys means one global order: the stats frame then ranks in one
+    task (it holds at most a few rows per segment), while the rows
+    still rank in parallel per segment.
+
+    Shape: :func:`_segments` cuts each key's rows into segments that
+    are monotone in the order (fixed-width ranges of a numeric
+    `order`, or the caller's `bucket` column when the order key is
+    md5-uniform and needs no ranges; tied hot segments split by the
+    tie column) and aggregates one stats row per segment; ONE bounded
+    exclusive window over the stats frame turns segment totals into
+    bases; a broadcast ``<=>`` join puts the bases back on the rows;
+    and one window per (keys, segment) finishes the running measure.
+
+    `limit` (a number, or a function from the per-key totals frame
+    (keys…, `__total`) to a (keys…, `__limit`) frame — keys missing
+    from it select nothing) keeps only rows whose running measure is
+    <= the key's limit and drops segments whose base is already past
+    it before the final window. `total` names an optional output column
+    with the key's total measure. `tie` must be unique and non-null
+    within a key; `order` must hold no NaN/±Inf (range arithmetic)."""
+    keys = list(keys)
+    m = F.lit(1) if measure is None else F.col(measure)
+    rows, stats, cols = _segments(
+        df, keys, order, tie, m, bucket, n_buckets, nulls_first
+    )
+    before = (
+        Window.partitionBy(*keys)
+        .orderBy(*cols)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    bases = stats.withColumn(
+        "__base", F.coalesce(F.sum("__m").over(before), F.lit(0))
+    )
+    if callable(limit) or total is not None:
+        totals = stats.groupBy(*keys).agg(F.sum("__m").alias("__total"))
+    if total is not None:
+        bases = null_safe_join(
+            bases, totals.withColumnRenamed("__total", total), keys
         )
-    raise AssertionError("unreachable")  # pragma: no cover
+    if callable(limit):
+        bases = null_safe_join(bases, limit(totals), keys)
+    elif limit is not None:
+        bases = bases.withColumn("__limit", F.lit(limit))
+    if limit is not None:
+        bases = bases.filter(F.col("__base") <= F.col("__limit"))
+    bases = bases.drop("__c", "__m")
+    o = F.col(order)
+    w = Window.partitionBy(*keys, *cols).orderBy(
+        o.asc_nulls_first() if nulls_first else o.asc_nulls_last(),
+        *([F.col(tie).asc()] if tie is not None else []),
+    )
+    run = (
+        F.row_number().over(w)
+        if measure is None
+        else F.sum(m).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+    )
+    res = null_safe_join(rows, bases, keys + cols).withColumn(
+        out, F.col("__base") + run
+    )
+    if limit is not None:
+        res = res.filter(F.col(out) <= F.col("__limit")).drop("__limit")
+    return res.drop("__base", *[c for c in cols if c != bucket])
 
 
 def distributed_global_rank(
@@ -332,25 +344,18 @@ def distributed_global_rank(
     out: str = "rnk",
     percentile: str | None = None,
     nulls_first: bool | None = None,
-    min_heavy: int = 65536,
 ) -> DataFrame:
     """Exact global row_number over (value, id) WITHOUT the
     single-partition window Spark plans for an unpartitioned
     ``row_number().over(Window.orderBy(...))`` — the shape that
     silently serializes a 100 TB rank through one task.
 
-    Two-phase (the packing/_prefix_sum family), skew-adaptive: rows
-    segment monotonically in the global order via
-    :func:`_rank_segments` (fixed-width value ranges, with heavy
-    segments refined by finer value ranges and tied/all-NULL heavy
-    segments split at sampled id boundaries — so a corpus where one
-    value holds 90% of the rows still ranks through balanced
-    parallel windows, not one hot partition). Per-segment counts
-    partial-aggregate to a driver-bounded table, the driver computes
-    the exclusive prefix, and each segment ranks its own rows in
-    parallel with the segment base added. Ties on value break by id
-    asc (both directions), so the rank is total and deterministic on
-    any cluster layout AND invariant to where segment boundaries land.
+    One :func:`segmented_prefix` over the (signed) value with the id as
+    tie-break: value-range segments rank in parallel, and a value
+    owning most of the rows splits by id ranges, so a corpus where one
+    value holds 90% of the rows still ranks through balanced windows.
+    Ties on value break by id asc (both directions), so the rank is
+    total and deterministic on any cluster layout.
 
     With ``percentile=<name>``, also emits (rank-1)/(n-1) — the exact
     percentile_rank, same semantics as F.percent_rank over the global
@@ -359,10 +364,8 @@ def distributed_global_rank(
     NULL ordering: by default NULLs sort first when ascending / last
     when descending (Spark's default); pass ``nulls_first=True/False``
     to force either placement (e.g. Spark's ``asc_nulls_last``).
-    ``n_buckets`` (default 1024) is the TARGET parallelism of the
-    rank stage — segments stay within ~max(4·n/n_buckets, min_heavy)
-    rows after refinement; raise it for wider clusters. ``min_heavy``
-    is the absolute never-refine floor (see :func:`_rank_segments`).
+    ``n_buckets`` (default 1024) is the target parallelism of the rank
+    stage.
 
     Caller contract: ``id_col`` unique + non-null; ``value_col`` must
     not contain NaN/±Inf (filter or remap upstream — IEEE specials
@@ -370,37 +373,20 @@ def distributed_global_rank(
     """
     if nulls_first is None:
         nulls_first = ascending
-    src = df.withColumn("__v", F.col(value_col).cast("double"))
-    ksrc = src.withColumn(
-        "__k", F.col("__v") if ascending else -F.col("__v")
-    )
-    b, segs = _rank_segments(
-        ksrc, id_col, n_buckets, None, nulls_first, min_heavy=min_heavy
-    )
-    if not segs:
-        res = src.withColumn(out, F.lit(0).cast("long")).drop("__v").limit(0)
-        if percentile:
-            res = res.withColumn(percentile, F.lit(0.0))
-        return res
-    n = sum(c for _, c, _ in segs)
-    base_rows, acc = [], 0
-    for seg_id, cnt, _ in segs:
-        base_rows.append((seg_id, acc))
-        acc += cnt
-    bases = df.sparkSession.createDataFrame(
-        base_rows, "__seg long, __base long"
-    )
-    w = Window.partitionBy("__seg").orderBy(
-        F.col("__k").asc_nulls_first(), F.col(id_col).asc()
-    )
-    res = (
-        b.join(F.broadcast(bases), "__seg")
-        .withColumn(out, (F.col("__base") + F.row_number().over(w)).cast("long"))
-        .drop("__seg", "__base", "__v", "__k")
-    )
+    v = F.col(value_col).cast("double")
+    res = segmented_prefix(
+        df.withColumn("__k", v if ascending else -v),
+        [],
+        "__k",
+        tie=id_col,
+        n_buckets=n_buckets,
+        nulls_first=nulls_first,
+        out=out,
+        total="__n" if percentile else None,
+    ).withColumn(out, F.col(out).cast("long"))
     if percentile:
-        denom = max(n - 1, 1)
         res = res.withColumn(
-            percentile, (F.col(out) - 1) / F.lit(float(denom))
-        )
-    return res
+            percentile,
+            (F.col(out) - 1) / F.greatest(F.col("__n") - 1, F.lit(1)).cast("double"),
+        ).drop("__n")
+    return res.drop("__k")

@@ -27,8 +27,13 @@ Design rules the composition enforces (each learned from a probe):
   blocks still release via the ContextCleaner once the stage frame
   leaves the manifest's lineage (no nine stacked corpus-sized caches,
   the r12 lesson). `eager=False` keeps the truncation but folds each
-  stage's materialization into its first consumer job — with
-  accounting off, constructing the whole manifest runs ZERO jobs.
+  stage's materialization into its first consumer job, so stage
+  boundaries add no construction-time job. Construction is NOT
+  job-free, though: stages that need data to build their plan run
+  jobs while the manifest is built (the near-dup connected-components
+  iterations and size-based broadcast decisions, among others) — 57
+  of them for the `pipeline_curate` inventory row at sf0.1 with
+  accounting off, against 11 when the manifest executes.
   Under `SPARK_GRAFT_ON_CLUSTER` with a configured checkpoint dir the
   stages checkpoint RELIABLY to cluster storage (executor loss no
   longer loses the truncated lineage).
@@ -53,7 +58,6 @@ import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
 
 __all__ = ["curate_corpus"]
 
@@ -64,160 +68,48 @@ def _fused_manifest(
     seq_len: int,
     n_epochs: int,
     seed: int,
-    rows_per_bucket: int = 65536,
 ) -> DataFrame:
-    """Stages 8+9 fused (r16): pack layout and epoch rank from ONE
-    persisted survivors frame, ZERO joins in the manifest.
+    """Stages 8+9 fused: pack layout and epoch rank from ONE lazily
+    checkpointed survivors frame, ZERO joins in the manifest.
 
     `concat_pack_layout` and `training_order` both scan the identical
-    survivor set and both are two-phase rank shapes; composed via
-    joins they cost two extra persisted projections, three stats
-    collects and three shuffle joins (order ⋈ pack ⋈ grp). Here:
+    survivor set and both are prefix shapes; composed via joins they
+    cost two extra persisted projections and three shuffle joins
+    (order ⋈ pack ⋈ grp). Here the token offsets are one
+    operators.windows.segmented_prefix over id order, and the epoch
+    positions are sampling._epoch_positions over the laid-out rows
+    (training_order's shuffled-epoch rank), so the manifest is one
+    plan: the (id, grp, t) projection — the only per-document work,
+    the token count, runs once — exchange by id range → window cumsum
+    → epoch explode → exchange by (epoch, hash bucket) → window rank.
 
-    - ONE persisted (id, grp, t) projection (the only per-document
-      work — the token count — runs once);
-    - ONE stats job (count/min/max of id) sizing the pack buckets;
-    - ONE combined aggregate job producing BOTH driver tables: the
-      per-id-bucket token totals (pack prefix) keyed kind=-1 and the
-      per-(epoch, hash-bucket) row counts (rank prefix) keyed
-      kind=epoch — a union of two tiny keyed projections of the same
-      cached frame, so the corpus is scanned once, not twice;
-    - the manifest itself is one plan: exchange by id-bucket → window
-      cumsum (token offsets) → epoch explode → exchange by
-      (epoch, hash-bucket) → window rank — no join anywhere, both
-      driver tables ride in as broadcast maps.
-
-    Bit-identical to the unfused composition (pinned by the
-    differential in tests/test_pipeline_e2e.py): pack bucketing
-    replicates packing._prefix_sum (fixed-width id ranges off the
-    same stats), the rank replicates training_order's shuffled-epoch
-    path (same nb, same __b, same (u, id) order, same md5 u).
+    Identical to the unfused composition (pinned by the differential
+    in tests/test_pipeline_e2e.py): both run the same primitive, and
+    offsets and positions do not depend on where segment boundaries
+    land.
     """
-    from distributedqueryengine_spark.functions.sampling import _uniform01
+    from distributedqueryengine_spark.functions.sampling import _epoch_positions
+    from distributedqueryengine_spark.operators.windows import segmented_prefix
     from distributedqueryengine_spark.session import ensure_parallelism
 
-    # LAZY localCheckpoint (r17; eager through r16): lineage still
-    # truncates at construction (the returned frame is an RDD-scan
-    # leaf, so the tail's analyzer passes stay O(1)), but the blocks
-    # materialize inside the FIRST consumer job instead of a serial
-    # construction-time job of their own — and with the stats/totals
-    # collects below also gone lazy, merely CONSTRUCTING the manifest
-    # runs zero jobs.
+    # lazy localCheckpoint: lineage truncates at construction (the
+    # returned frame is an RDD-scan leaf, so the tail's analyzer passes
+    # stay O(1)), and the blocks materialize inside the first consumer
+    # job instead of a construction-time job of their own
     surv = ensure_parallelism(cur).select(
         "id", "grp", tokens.cast("long").alias("t")
     ).localCheckpoint(eager=False)
-    # r17: the corpus stats ride a bounded 1-row broadcast cross and
-    # both driver prefix tables become bounded in-plan windows — the
-    # pack bases over the ~G-row bucket totals, the rank bases over
-    # the ≤n_epochs·nb epoch-bucket counts (offsets/positions are
-    # invariant to where bucket boundaries land, so in-plan width
-    # arithmetic only has to be deterministic).
-    stats = surv.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.min("id").alias("__lo"),
-        F.max("id").alias("__hi"),
+    laid = segmented_prefix(surv, [], "id", measure="t", out="__end").select(
+        "id", "grp", "t", (F.col("__end") - F.col("t")).alias("off")
     )
-    nbk = F.greatest(
-        F.lit(1), F.ceil(F.col("__n") / F.lit(float(rows_per_bucket)))
-    )
-    width = F.greatest(
-        F.lit(1),
-        F.ceil((F.col("__hi") - F.col("__lo") + 1) / nbk.cast("double")),
-    )
-    sb = (
-        surv.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "__bkt", ((F.col("id") - F.col("__lo")) / width).cast("long")
-        )
-        .drop("__n", "__lo", "__hi")
-    )
-    nb = max(8, min(1024, 65536 // n_epochs))
-    us = [
-        _uniform01(F.col("id").cast("string"), seed=seed * 1_000_003 + e)
-        for e in range(n_epochs)
-    ]
-    ebs = [
-        F.least(F.floor(u * nb), F.lit(nb - 1)).cast("long") for u in us
-    ]
-    w_pb = Window.orderBy("__bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    pack_bases = (
-        sb.groupBy("__bkt")
-        .agg(F.sum("t").alias("__tot"))
-        .select(
-            "__bkt",
-            F.coalesce(F.sum("__tot").over(w_pb), F.lit(0))
-            .cast("long").alias("__pb"),
-        )
-    )
-    ecounts = surv.select(
-        F.lit(0).cast("long").alias("epoch"), ebs[0].alias("__b")
-    )
-    for e in range(1, n_epochs):
-        ecounts = ecounts.unionAll(
-            surv.select(
-                F.lit(e).cast("long").alias("epoch"), ebs[e].alias("__b")
-            )
-        )
-    w_eb = (
-        Window.partitionBy("epoch")
-        .orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rank_bases = (
-        ecounts.groupBy("epoch", "__b")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .select(
-            "epoch", "__b",
-            F.coalesce(F.sum("__c").over(w_eb), F.lit(0))
-            .cast("long").alias("__eb"),
-        )
-    )
-    w_off = Window.partitionBy("__bkt").orderBy("id").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    laid = (
-        sb.join(F.broadcast(pack_bases), "__bkt")
-        .withColumn(
-            "off", F.col("__pb") + F.coalesce(F.sum("t").over(w_off), F.lit(0))
-        )
-    )
-    ep = (
-        laid.select(
-            "id",
-            "grp",
-            "t",
-            "off",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(e).cast("long").alias("epoch"),
-                            us[e].alias("__u"),
-                        )
-                        for e in range(n_epochs)
-                    ]
-                )
-            ).alias("__e"),
-        )
-        .select("id", "grp", "t", "off", "__e.epoch", "__e.__u")
-        .withColumn(
-            "__b",
-            F.least(F.floor(F.col("__u") * nb), F.lit(nb - 1)).cast("long"),
-        )
-        .join(F.broadcast(rank_bases), ["epoch", "__b"])
-    )
-    w_rank = Window.partitionBy("epoch", "__b").orderBy(
-        F.col("__u").asc(), F.col("id").asc()
-    )
+    ep = _epoch_positions(laid, range(n_epochs), seed)
     seq_first = F.floor(F.col("off") / seq_len)
     seq_last = F.floor(
         (F.col("off") + F.greatest(F.col("t"), F.lit(1)) - 1) / seq_len
     )
     return ep.select(
         "epoch",
-        (F.col("__eb") + F.row_number().over(w_rank) - 1).alias("pos"),
+        "pos",
         "id",
         "grp",
         F.col("t").alias("n_tokens"),
@@ -451,16 +343,11 @@ def curate_corpus(
             acc, "budget_select", n, cur.join(picked, "id", "left_semi")
         )
     else:
-        # fused form (r15): one (group, bucket) aggregate carries both
-        # the rate computation and the quota ranking — identical rows
-        # to temperature_mixture_rates ∘ apply_mixture_rates (pinned).
-        # lazy_quotas (r17): curation group columns are bounded source
-        # catalogs (dozens of values), so the quotas/prefixes ride the
-        # manifest plan as broadcast frames instead of a construction-
-        # time counts collect — one fewer serial sync job
+        # fused form: one (group, bucket) aggregate carries both the
+        # rate computation and the quota ranking — identical rows to
+        # temperature_mixture_rates ∘ apply_mixture_rates (pinned)
         mixed = apply_temperature_mixture(
             cur, "grp", "id", temperature=temperature, seed=seed,
-            lazy_quotas=True,
         )
         if account:
             cur, n = _stage(acc, "mixture", n, mixed)
@@ -469,9 +356,9 @@ def curate_corpus(
             # projection, which persists itself) — skip the cache layer
             cur, n = mixed, -1
 
-    # 8+9. pack layout + per-epoch training order, FUSED (r16): one
-    # persisted survivors projection, one combined bucket-totals
-    # aggregate, zero joins — see _fused_manifest. Replaces
+    # 8+9. pack layout + per-epoch training order, FUSED: one
+    # checkpointed survivors projection, zero joins — see
+    # _fused_manifest. Replaces
     # concat_pack_layout ∘ training_order ∘ (order ⋈ pack ⋈ grp),
     # bit-identically (differential-pinned in tests/test_pipeline_e2e).
     manifest = _fused_manifest(

@@ -777,7 +777,7 @@ def q_sample_budget(
     """Token-budget corpus selection (r13): take documents in quality
     order until an 8,000-token budget fills — the maximal prefix under
     (quality desc, doc_id asc) whose running token total stays within
-    budget (functions/sampling.select_until_budget: two-phase prefix
+    budget (functions/sampling.select_until_budget: segmented prefix
     sum, no global sort). Output keeps the running total so the cut is
     value-checkable, plus lang for the suite tag. `scored` (columns
     doc_id, lang, q, nt) lets the sample_suite feed ONE shared
@@ -801,10 +801,6 @@ def q_sample_budget(
         )
     sel = select_until_budget(
         scored, budget=8000, id_col="doc_id", weight_col="nt", score_col="q",
-        # r17: quality_score is a smooth [0,1] heuristic (no 64k-row
-        # tie at any tested sf) — zero-collect lazy prefix plan,
-        # identical rows (tests/test_sampling.py)
-        lazy_prefix=True,
     )
     langs = scored.select("doc_id", "lang")
     return (
@@ -1119,11 +1115,9 @@ def q_agg_percentiles(
     F.percentile's per-group in-memory value map. Safe under the 4dp
     rounding because the helper is BIT-identical to F.percentile (same
     interpolation expression; pinned in tests/test_relational.py), not
-    merely close. r17: the helper's default two-phase rank (per-(group,
-    value-range) parallel windows, in-plan prefix) removes the r16
-    one-window-task-per-group bound on this PRIMARY path (r16 ADVICE);
-    the ~0.5s local cost of the extra bounded passes is the price of
-    the scale-safe shape and is documented in OPTIMIZATION_r17.md."""
+    merely close. The helper ranks through per-(group, value-range)
+    parallel windows, so no group serializes through one window task;
+    the extra bounded passes cost ~0.5s locally at sf0.1."""
     from distributedqueryengine_spark.operators.aggregates import (
         exact_percentiles_grouped,
     )
@@ -3103,7 +3097,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     return packing.concat_pack_layout(
-        d, tokens=T.token_count("text"), seq_len=512, rows_per_bucket=128
+        d, tokens=T.token_count("text"), seq_len=512
     )
 
 

@@ -71,12 +71,16 @@ def test_percentile_matches_percent_rank(spark):
 
 
 def test_no_single_partition_global_sort(spark):
+    import re
+
     df = spark.createDataFrame([(i, float(i)) for i in range(100)], "id long, v double")
     plan = distributed_global_rank(df, "v", "id")._jdf.queryExecution().executedPlan().toString()
-    # the rank window partitions by bucket — a global-window plan would
-    # show an empty PARTITION BY (windowspecdefinition without our
-    # bucket column feeding a SinglePartition exchange)
-    assert "SinglePartition" not in plan, plan
+    # the row-level rank window partitions by segment — a global-window
+    # plan would show an empty PARTITION BY. (A SinglePartition exchange
+    # may feed the bounded per-segment stats frame's prefix window; the
+    # corpus rows never pass through one.)
+    ranks = re.findall(r"Window \[row_number\(\).*?\], \[([^\]]*)\]", plan)
+    assert ranks and all("__seg" in parts for parts in ranks), plan
 
 
 def test_empty_input(spark):
@@ -110,31 +114,28 @@ def test_tie_skew_matches_global_window(spark):
     df = _skewed_df(spark)
     got = {r["id"]: r["rnk"]
            for r in distributed_global_rank(
-               df, "v", "id", n_buckets=16, min_heavy=64).collect()}
+               df, "v", "id", n_buckets=16).collect()}
     ref = {r["id"]: r["ref"] for r in _reference(df, "v", "id", True).collect()}
     assert got == ref
 
 
 def test_tie_skew_segments_are_balanced(spark):
-    """The judge-specified balance contract: after refinement no
-    segment holds more than ~2× the mean row count (mean = n /
-    n_buckets), even though one value owns 90% of the corpus — the
-    pre-r14 behavior put all 3,600 tied rows in ONE bucket's window."""
-    from distributedqueryengine_spark.operators.windows import _rank_segments
+    """The balance contract: no segment window holds more than 2× the
+    mean row count (mean = n / n_buckets), even though one value owns
+    90% of the corpus — without the tie split all ~3,600 tied rows
+    would sit in ONE window."""
+    from distributedqueryengine_spark.operators.windows import _segments
 
     n, n_buckets = 4000, 16
-    df = _skewed_df(spark, n=n)
-    ksrc = df.withColumn("__v", F.col("v")).withColumn("__k", F.col("v"))
-    _, segs = _rank_segments(
-        ksrc, "id", n_buckets, None, nulls_first=True, min_heavy=64
+    df = _skewed_df(spark, n=n).withColumn("__all", F.lit(0))
+    rows, stats, cols = _segments(
+        df, ["__all"], "v", "id", F.lit(1), None, n_buckets, True
     )
-    counts = {seg: cnt for seg, cnt, _ in segs}
-    assert sum(counts.values()) == n
-    mean = n / n_buckets
-    assert max(counts.values()) <= 2 * mean, sorted(
-        counts.items(), key=lambda kv: -kv[1])[:5]
-    # and the prefix over the counts map is a total cover (no gaps)
-    assert sorted(counts) == list(range(min(counts), min(counts) + len(counts)))
+    counts = [r["count"] for r in rows.groupBy(*cols).count().collect()]
+    assert sum(counts) == n
+    assert max(counts) <= 2 * n / n_buckets, sorted(counts)[-5:]
+    # the stats frame covers every row exactly once
+    assert stats.agg(F.sum("__c")).collect()[0][0] == n
 
 
 def test_tied_values_with_string_ids(spark):
@@ -145,7 +146,7 @@ def test_tied_values_with_string_ids(spark):
     df = spark.createDataFrame(rows, "id string, v double")
     got = {r["id"]: r["rnk"]
            for r in distributed_global_rank(
-               df, "v", "id", n_buckets=8, min_heavy=64).collect()}
+               df, "v", "id", n_buckets=8).collect()}
     ref = {r["id"]: r["ref"] for r in _reference(df, "v", "id", True).collect()}
     assert got == ref
 
@@ -158,8 +159,7 @@ def test_null_heavy_corpus(spark):
     for ascending in (True, False):
         got = {r["id"]: r["rnk"]
                for r in distributed_global_rank(
-                   df, "v", "id", ascending=ascending, n_buckets=8,
-                   min_heavy=64).collect()}
+                   df, "v", "id", ascending=ascending, n_buckets=8).collect()}
         ref = {r["id"]: r["ref"]
                for r in _reference(df, "v", "id", ascending).collect()}
         assert got == ref, f"ascending={ascending}"

@@ -235,3 +235,32 @@ def test_stupid_backoff_validation(spark, tables):
     lm = train_trigram_lm(tables["documents"].limit(20), "text", vocab_size=50)
     with _pytest.raises(ValueError):
         score_stupid_backoff(tables["documents"], "text", lm, alpha=0.0)
+
+
+def test_lazy_vocab_matches_eager_counts_and_scores(spark, tables):
+    """train_trigram_lm(lazy_vocab=True) — vocabulary kept as a frame,
+    UNK remap by joins on the gram count tables — gives the eager
+    build's n-gram counts and document scores exactly, on the fixture
+    documents with a vocabulary cutoff that maps many tokens to UNK."""
+    from distributedqueryengine_spark.functions.lm import (
+        score_stupid_backoff,
+        train_trigram_lm,
+    )
+
+    docs = tables["documents"]
+    eager = train_trigram_lm(docs, "text", vocab_size=300)
+    lazy = train_trigram_lm(docs, "text", vocab_size=300, lazy_vocab=True)
+    for name in ("trigrams", "bigrams", "unigrams"):
+        cols = eager[name].columns
+        a = sorted(tuple(r) for r in eager[name].collect())
+        b = sorted(tuple(r) for r in lazy[name].select(*cols).collect())
+        assert a == b and a, name
+    probe = docs.filter(F.col("doc_id") % 5 == 0)
+
+    def scores(lm):
+        return sorted(
+            tuple(r) for r in score_stupid_backoff(probe, "text", lm).collect()
+        )
+
+    a, b = scores(eager), scores(lazy)
+    assert a == b and a

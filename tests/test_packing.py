@@ -67,12 +67,19 @@ def test_chunk_bounds(spark):
 def test_concat_pack_layout_is_contiguous(spark):
     """Offsets are an exact exclusive prefix sum in doc_id order, no
     matter how many prefix-sum buckets are used (distribution-shape
-    invariance)."""
+    invariance of the segmented prefix the layout runs on)."""
+    from distributedqueryengine_spark.operators.windows import segmented_prefix
+
     d = _docs(spark)
     tok = T.token_count("text")
-    a = packing.concat_pack_layout(d, tokens=tok, seq_len=256, rows_per_bucket=7)
-    b = packing.concat_pack_layout(d, tokens=tok, seq_len=256, rows_per_bucket=10_000)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    src = d.select(F.col("doc_id").alias("id"), tok.cast("long").alias("t"))
+    few, many = (
+        sorted(map(tuple, segmented_prefix(
+            src, [], "id", measure="t", n_buckets=nb).collect()))
+        for nb in (2, 10_000)
+    )
+    assert few == many
+    a = packing.concat_pack_layout(d, tokens=tok, seq_len=256)
     rows = sorted(a.select("doc_id", "n_tokens", "tok_offset").collect())
     acc = 0
     for r in rows:

@@ -335,12 +335,10 @@ def test_curate_account_false_manifest_identical(spark):
 
 
 def test_fused_manifest_equals_unfused_composition(spark):
-    """r16: the fused pack+order tail (_fused_manifest — one survivors
-    persist, one combined bucket-totals aggregate, zero joins) must be
-    bit-identical to the unfused composition it replaced:
-    training_order ⋈ concat_pack_layout ⋈ grp. Multi-epoch, and a
-    bucket-boundary-exercising rows_per_bucket to force >1 pack bucket
-    so the driver prefix actually stitches."""
+    """The fused pack+order tail (_fused_manifest — one survivors
+    checkpoint, zero joins) must be bit-identical to the unfused
+    composition it replaced: training_order ⋈ concat_pack_layout ⋈
+    grp, single- and multi-epoch."""
     from distributedqueryengine_spark.functions.packing import (
         concat_pack_layout,
     )
@@ -354,14 +352,12 @@ def test_fused_manifest_equals_unfused_composition(spark):
         F.col("doc_id").alias("id"), "text", F.col("source").alias("grp")
     ).filter(F.col("id") % 3 != 0)
 
-    for n_epochs, seed, rpb in [(1, 0, 65536), (3, 7, 16)]:
+    for n_epochs, seed in [(1, 0), (3, 7)]:
         fused = _fused_manifest(
-            cur, T.token_count("text"), 512, n_epochs, seed,
-            rows_per_bucket=rpb,
+            cur, T.token_count("text"), 512, n_epochs, seed
         )
         pack = concat_pack_layout(
-            cur, T.token_count("text"), id_col="id", seq_len=512,
-            rows_per_bucket=rpb,
+            cur, T.token_count("text"), id_col="id", seq_len=512
         )
         order = training_order(cur, "id", n_epochs=n_epochs, seed=seed)
         ref = (
@@ -374,7 +370,7 @@ def test_fused_manifest_equals_unfused_composition(spark):
         )
         got = {tuple(r) for r in fused.collect()}
         want = {tuple(r) for r in ref.collect()}
-        assert got == want and got, (n_epochs, seed, rpb, len(got), len(want))
+        assert got == want and got, (n_epochs, seed, len(got), len(want))
 
     # empty input keeps the native schema and yields zero rows
     empty = _fused_manifest(

@@ -396,7 +396,7 @@ def test_budget_tie_skew_dominant_score(spark):
     got = sorted(
         (r["id"], r["score"], r["weight"], r["cum"])
         for r in select_until_budget(
-            df, budget, n_buckets=16, min_heavy=64).collect()
+            df, budget, n_buckets=16).collect()
     )
     assert got == sorted(_py_budget(rows, budget))
 
@@ -411,7 +411,7 @@ def test_budget_string_ids_native_type(spark):
 
     rows = [(f"doc-{i:04d}", 1.0, 10) for i in range(100)]
     df = spark.createDataFrame(rows, "id string, score double, w long")
-    got = select_until_budget(df, 55, min_heavy=64).collect()
+    got = select_until_budget(df, 55).collect()
     assert sorted(r["id"] for r in got) == [f"doc-{i:04d}" for i in range(5)]
     assert max(r["cum"] for r in got) == 50
     assert dict(df.dtypes)["id"] == "string"
@@ -468,11 +468,27 @@ def test_sample_budget_oracle_parity_with_blank_docs(spark, tmp_path):
     assert got == ref
 
 
-def test_apply_mixture_two_phase_equals_window_path(spark):
-    """r14: the driver-bounded two-phase mixture rank (hash-range
-    sub-buckets per group — no corpus-through-#groups-tasks window)
-    must return EXACTLY the window path's rows, including quota
-    boundaries, empty groups, rate >= 1, and absent-group drops."""
+def _py_mixture(rows, rate_by_group, seed):
+    """(id, group) rows -> the rows a mixture keeps: per group, the
+    first ceil(rate * n) in (md5(seed § id), id) order."""
+    import hashlib
+    import math as _m
+
+    out = []
+    for g, rate in rate_by_group.items():
+        grows = sorted(
+            (hashlib.md5(f"{seed}§{i}".encode()).hexdigest(), i)
+            for i, gg in rows if gg == g
+        )
+        out += [(i, g) for _, i in grows[: _m.ceil(rate * len(grows))]]
+    return sorted(out, key=lambda r: (r[0], str(r[1])))
+
+
+def test_apply_mixture_matches_driver_reference(spark):
+    """The in-plan mixture rank (hash-range buckets per group, no
+    corpus-through-#groups-tasks window) returns EXACTLY the driver
+    reference's rows, including quota boundaries, rate >= 1, a NULL
+    group key, and absent-group drops."""
     import random
 
     from distributedqueryengine_spark.functions.sampling import (
@@ -480,30 +496,19 @@ def test_apply_mixture_two_phase_equals_window_path(spark):
     )
 
     rng = random.Random(5)
-    rows = [(i, f"src{rng.randint(0, 4)}") for i in range(800)]
+    rows = [(i, rng.choice(["src0", "src1", "src2", "src3", "src4", None]))
+            for i in range(800)]
     df = spark.createDataFrame(rows, "id long, g string")
-    rates = spark.createDataFrame(
-        [("src0", 0.25), ("src1", 1.0), ("src2", 1.5), ("src3", 0.001)],
-        "group string, rate double",
-    )  # src4 absent → dropped entirely
-    two_phase = apply_mixture_rates(df, rates, "g", "id", seed=7)
-    windowed = apply_mixture_rates(
-        df, rates, "g", "id", seed=7, max_driver_groups=0
+    rates = {"src0": 0.25, "src1": 1.0, "src2": 1.5, "src3": 0.001, None: 0.5}
+    rdf = spark.createDataFrame(list(rates.items()), "group string, rate double")
+    # src4 absent from the rates → dropped entirely
+    got = sorted(
+        ((r["id"], r["g"]) for r in apply_mixture_rates(
+            df, rdf, "g", "id", seed=7).collect()),
+        key=lambda r: (r[0], str(r[1])),
     )
-    a = sorted((r["id"], r["g"]) for r in two_phase.collect())
-    b = sorted((r["id"], r["g"]) for r in windowed.collect())
-    assert a == b and a
-    # exact quotas per group
-    from collections import Counter
-    import math as _m
-
-    n_by_g = Counter(g for _, g in rows)
-    got_by_g = Counter(g for _, g in a)
-    assert got_by_g["src0"] == _m.ceil(0.25 * n_by_g["src0"])
-    assert got_by_g["src1"] == n_by_g["src1"]
-    assert got_by_g["src2"] == n_by_g["src2"]  # rate >= 1 keeps all
-    assert got_by_g["src3"] == 1               # ceil(0.001 · n) = 1
-    assert "src4" not in got_by_g
+    assert got == _py_mixture(rows, rates, 7) and got
+    assert {g for _, g in got} == {"src0", "src1", "src2", "src3", None}
 
 
 def test_apply_mixture_no_group_window_in_plan(spark):
@@ -583,7 +588,7 @@ def test_grouped_budget_matches_per_group_python(spark):
     budgets = {"lang0": 400, "lang1": 0, "lang2": 10_000_000}
     got = {}
     for r in select_until_budget_grouped(
-        df, budgets, group_col="lang", min_heavy=64
+        df, budgets, group_col="lang"
     ).collect():
         got.setdefault(r["lang"], []).append(
             (r["id"], r["score"], r["weight"], r["cum"])
@@ -595,21 +600,6 @@ def test_grouped_budget_matches_per_group_python(spark):
     assert "lang3" not in got          # unbudgeted → nothing
     assert "lang1" not in got          # zero budget → nothing
     assert len(got["lang2"]) == sum(1 for r in rows if r[1] == "lang2")
-
-
-def test_grouped_budget_group_cap(spark):
-    from distributedqueryengine_spark.functions.sampling import (
-        select_until_budget_grouped,
-    )
-
-    df = spark.createDataFrame([(1, "a", 1.0, 1)], "id long, g string, score double, w long")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_driver_groups"):
-        select_until_budget_grouped(
-            df, {f"g{i}": 1 for i in range(99)}, group_col="g",
-            max_driver_groups=10,
-        )
 
 
 def test_grouped_budget_job_count_independent_of_groups(spark):
@@ -649,10 +639,9 @@ def test_grouped_budget_job_count_independent_of_groups(spark):
 
 
 def test_grouped_budget_refinement_path_matches(spark):
-    """Tie-heavy corpus across several groups with a tiny min_heavy so
-    the (group, segment) refinement actually fires: results must still
-    equal the per-group python reference (boundaries move load, never
-    values), and heavy tied cells must have been split."""
+    """Tie-heavy corpus across several groups, so the tie split
+    actually fires: results must still equal the per-group python
+    reference (boundaries move load, never values)."""
     import random
 
     from distributedqueryengine_spark.functions.sampling import (
@@ -671,7 +660,7 @@ def test_grouped_budget_refinement_path_matches(spark):
     budgets = {"lang0": 700, "lang1": 1200, "lang2": 10_000_000}
     got = {}
     out = select_until_budget_grouped(
-        df, budgets, group_col="lang", n_buckets=8, min_heavy=32
+        df, budgets, group_col="lang", n_buckets=8
     )
     for r in out.collect():
         got.setdefault(r["lang"], []).append(
@@ -779,8 +768,8 @@ def test_training_order_empty_input_keeps_native_id_type(spark):
 
 
 def test_apply_mixture_rates_rejects_duplicate_groups(spark):
-    """r15: duplicate group rows in `rates` raise on BOTH rank paths
-    (driver-dict and window) instead of silently diverging."""
+    """r15: duplicate group rows in `rates` raise instead of silently
+    duplicating the group's rows through the rate join."""
     from distributedqueryengine_spark.functions.sampling import (
         apply_mixture_rates,
     )
@@ -793,8 +782,6 @@ def test_apply_mixture_rates_rejects_duplicate_groups(spark):
     )
     with pytest.raises(ValueError, match="duplicate"):
         apply_mixture_rates(df, dup, "src", "id").collect()
-    with pytest.raises(ValueError, match="duplicate"):
-        apply_mixture_rates(df, dup, "src", "id", max_driver_groups=1).collect()
 
 
 def test_apply_temperature_mixture_equals_split_form(spark):
@@ -872,109 +859,108 @@ def test_categorical_curriculum_orders_tiers(spark):
         categorical_curriculum("tier", ["a", "a"])
 
 
-def test_mixture_bounded_collect_fallback_protects_driver(spark):
-    """r16 ADVICE: the fused mixture's (group × bucket) counts collect
-    is LIMIT-bounded at max_driver_groups × n_buckets rows, so a
-    high-cardinality group column trips the window fallback WITHOUT
-    transferring the full count table — and the fallback's rows equal
-    the driver-table path's rows."""
+def _many_groups(n_groups=10_000, per_group=3, seed=4):
+    import random
+
+    rng = random.Random(seed)
+    return [
+        (g * per_group + j, f"g{g}", round(rng.random(), 2), rng.randint(1, 9))
+        for g in range(n_groups)
+        for j in range(per_group)
+    ] + [(10**7 + j, None, round(rng.random(), 2), 3) for j in range(5)]
+
+
+def test_mixture_many_groups_matches_driver_reference(spark):
+    """>= 10k groups plus a NULL group: the temperature mixture keeps
+    exactly the driver reference's rows (rates from the reference's
+    own temperature rule, rounded like Spark's 6dp HALF_UP)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     from distributedqueryengine_spark.functions.sampling import (
         apply_temperature_mixture,
     )
 
-    rows = [(i, f"g{i % 40}") for i in range(400)]
+    rows = [(i, g) for i, g, _s, _w in _many_groups()]
     df = spark.createDataFrame(rows, "id long, src string")
-    # 40 groups > max_driver_groups=8 → bounded collect sees at most
-    # 8 × n_buckets + 1 rows and falls back to the window path
-    lo = apply_temperature_mixture(
-        df, "src", "id", temperature=0.7, seed=3, max_driver_groups=8
+    temp = 0.5
+    sizes: dict = {}
+    for _i, g in rows:
+        sizes[g] = sizes.get(g, 0) + 1
+    z = sum(n ** (1 / temp) for n in sizes.values())
+    total = sum(sizes.values())
+    rates = {
+        g: float(Decimal(repr(min((n ** (1 / temp) / z) * total / n, 1.0)))
+                 .quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+        for g, n in sizes.items()
+    }
+    got = sorted(
+        ((r["id"], r["src"]) for r in apply_temperature_mixture(
+            df, "src", "id", temperature=temp, seed=3).collect()),
+        key=lambda r: (r[0], str(r[1])),
     )
-    hi = apply_temperature_mixture(
-        df, "src", "id", temperature=0.7, seed=3, max_driver_groups=1024
-    )
-    a = sorted((r["id"], r["src"]) for r in lo.collect())
-    b = sorted((r["id"], r["src"]) for r in hi.collect())
-    assert a == b and a
+    assert got == _py_mixture(rows, rates, 3) and got
 
 
-def test_budget_lazy_prefix_equals_collect_path(spark):
-    """r17: the zero-collect lazy prefix plan returns EXACTLY the
-    collect path's rows — long and double weight families, ties,
-    boundary budgets, empty-group cases."""
+def test_grouped_budget_many_groups_matches_driver_reference(spark):
+    """>= 10k budgeted groups plus a NULL group (budgeted by a None
+    key): every group's selection equals the python maximal prefix."""
+    from distributedqueryengine_spark.functions.sampling import (
+        select_until_budget_grouped,
+    )
+
+    rows = _many_groups()
+    df = spark.createDataFrame(rows, "id long, g string, score double, w long")
+    budgets = {g: 10 for g in {r[1] for r in rows}}
+    got: dict = {}
+    for r in select_until_budget_grouped(df, budgets, group_col="g").collect():
+        got.setdefault(r["g"], []).append(
+            (r["id"], r["score"], r["weight"], r["cum"])
+        )
+    want = {}
+    for g, budget in budgets.items():
+        sel = _py_budget([(i, s, w) for i, gg, s, w in rows if gg == g], budget)
+        if sel:
+            want[g] = sorted(sel)
+    assert {g: sorted(v) for g, v in got.items()} == want
+    assert None in want
+
+
+def test_budget_prefix_matches_driver_reference(spark):
+    """select_until_budget and select_until_budget_grouped equal the
+    python sort-plus-cumsum reference — long and double weight
+    families, score ties, boundary budgets, a NULL group key and a
+    budgeted group absent from the data."""
     from distributedqueryengine_spark.functions.sampling import (
         select_until_budget,
         select_until_budget_grouped,
     )
 
     rows = [
-        (i, f"g{i % 3}", float((i * 7) % 13) / 3.0, 1 + (i % 5))
+        (i, [f"g{i % 3}", None][i % 7 == 0], float((i * 7) % 13) / 3.0,
+         1 + (i % 5))
         for i in range(700)
     ] + [(900, "g0", 2.0, 3), (901, "g1", 2.0, 3)]  # score ties
     df = spark.createDataFrame(rows, "id long, g string, score double, w long")
+    flat = [(i, s, w) for i, _g, s, w in rows]
     for budget in (0, 1, 57, 400, 10**6):
-        a = sorted(
-            tuple(r) for r in select_until_budget(
-                df, budget, id_col="id", weight_col="w", score_col="score"
-            ).collect()
+        got = sorted(
+            tuple(r) for r in select_until_budget(df, budget).collect()
         )
-        b = sorted(
-            tuple(r) for r in select_until_budget(
-                df, budget, id_col="id", weight_col="w", score_col="score",
-                lazy_prefix=True,
-            ).collect()
-        )
-        assert a == b, budget
-    budgets = {"g0": 120, "g1": 7, "gX": 50}  # gX absent from data
-    a = sorted(
-        tuple(r) for r in select_until_budget_grouped(
-            df, budgets, group_col="g", id_col="id",
-            weight_col="w", score_col="score",
-        ).collect()
+        assert got == sorted(_py_budget(flat, budget)), budget
+    budgets = {"g0": 120, "g1": 7, None: 40, "gX": 50}  # gX absent
+    got = sorted(
+        (r["g"] or "", r["id"], r["score"], r["weight"], r["cum"])
+        for r in select_until_budget_grouped(
+            df, budgets, group_col="g").collect()
     )
-    b = sorted(
-        tuple(r) for r in select_until_budget_grouped(
-            df, budgets, group_col="g", id_col="id",
-            weight_col="w", score_col="score", lazy_prefix=True,
-        ).collect()
+    want = sorted(
+        (g or "", *row)
+        for g, b in budgets.items()
+        for row in _py_budget([(i, s, w) for i, gg, s, w in rows if gg == g], b)
     )
-    assert a == b and a
+    assert got == want and any(g == "" for g, *_ in got)
     # double-weight family keeps the double cum end to end
-    dd = df.withColumn("w", df["w"] / 3.0)
-    a = sorted(
-        tuple(r) for r in select_until_budget(
-            dd, 50, id_col="id", weight_col="w", score_col="score"
-        ).collect()
-    )
-    b = sorted(
-        tuple(r) for r in select_until_budget(
-            dd, 50, id_col="id", weight_col="w", score_col="score",
-            lazy_prefix=True,
-        ).collect()
-    )
-    assert a == b and a
-
-
-def test_mixture_lazy_quotas_equals_collect_path(spark):
-    """r17: apply_temperature_mixture(lazy_quotas=True) — quotas,
-    prefixes and rates all in-plan — returns EXACTLY the collect
-    path's rows across temperatures and seeds."""
-    from distributedqueryengine_spark.functions.sampling import (
-        apply_temperature_mixture,
-    )
-
-    rows = [(i, f"s{min(i % 10, i % 7, 3)}") for i in range(900)]
-    df = spark.createDataFrame(rows, "id long, src string")
-    for temp in (0.5, 1.0, 2.0):
-        for seed in (0, 9):
-            a = sorted(
-                (r["id"], r["src"]) for r in apply_temperature_mixture(
-                    df, "src", "id", temperature=temp, seed=seed
-                ).collect()
-            )
-            b = sorted(
-                (r["id"], r["src"]) for r in apply_temperature_mixture(
-                    df, "src", "id", temperature=temp, seed=seed,
-                    lazy_quotas=True,
-                ).collect()
-            )
-            assert a == b and a, (temp, seed)
+    dd = df.withColumn("w", df["w"] / 4.0)
+    got = sorted(tuple(r) for r in select_until_budget(dd, 50.1).collect())
+    assert got == sorted(_py_budget([(i, s, w / 4.0) for i, s, w in flat], 50.1))
+    assert got and isinstance(got[0][3], float)
